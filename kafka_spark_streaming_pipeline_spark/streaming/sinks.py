@@ -1,86 +1,63 @@
-"""Idempotent keyed sinks (SURVEY.md §2.1 S5-S9, §4.1 exactly-once).
+"""Exactly-once streaming sinks (SURVEY.md §2.1 S5-S9, §4.1).
 
 The reference achieves effective exactly-once with idempotent MongoDB
 upserts keyed on (stream_id, chunk_index) (spark_streaming.py:322-337,
-463-486; README:563-569).  The engine keeps that design — deterministic
-keys + merge — on parquet tables:
+463-486; README:563-569).  The engine gets the same property from
+foreachBatch's replayable batch ids: every sink here appends its
+per-batch partial to a ``txn.CommitLog`` — a crash-atomic,
+commit-stamped merge-on-read log — and every view folds that log
+keeping one copy per commit, so a replayed batch lands exactly once.
+Each ``make_*_sink`` supplies only its partial and each ``*_view`` /
+``compact_*`` only its fold; the stamp format, empty-batch guard,
+replay guard and pinned-snapshot CAS compaction live in ``CommitLog``.
 
-- ``upsert_partitioned``: MERGE-shaped upsert that only rewrites the
-  *partitions touched by the batch* (dynamic partition overwrite).  At
-  100 TB the per-batch cost is O(touched streams), not O(table) — the
-  same access pattern a Delta/Iceberg MERGE would compile to, without
-  requiring those jars in this environment.
-- ``append_chunk_objects``: the object-store placeholder writes (S5)
-  as an append-only file sink partitioned by stream_id.
+The live path is ``make_live_log_sink``: two O(batch) appends per
+micro-batch, with ``latest_view`` resolving the newest row per key at
+read time and ``compact_log`` folding the log when read amplification
+grows.  The one write outside a log is ``append_chunk_objects``, the
+object-store placeholder writes (S5), each object atomic on its own.
 
-Both are safe under checkpoint replay: re-running a batch rewrites the
-same keys to the same values (last-writer-wins on the compound key).
-Crash-atomicity comes from the commit-marker protocol in ``txn``: the
-merge-on-read log (the DEFAULT live path, ``make_live_log_sink``) and
-the compactor publish every mutation as an atomic manifest rename, so
-a writer dying mid-write can never tear the table.  The plain
-dynamic-partition-overwrite ``upsert_partitioned`` remains as the
-lightweight alternative where the storage layer already provides
-atomic directory swap semantics.
+Every ``compact_*`` takes ``quiesced``: True (default) for a stopped,
+fully-checkpointed stream, False to compact under a live stream (see
+``CommitLog.compact``).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .txn import AtomicParquetTable, fs_exists
+from .txn import CommitLog, DedupKeys
 
 
-def upsert_partitioned(
-    batch_df: DataFrame,
-    table_path: str,
-    keys: list[str],
-    partition_col: str = "stream_id",
-    order_col: str | None = None,
-) -> None:
-    """Upsert ``batch_df`` into the parquet table at ``table_path``.
+@dataclass(frozen=True)
+class _Fold:
+    """How one log's rows merge: the per-commit dedup keys and the fold
+    that turns deduplicated partials into the merged state."""
 
-    Within the batch, the last row per key wins (ordered by
-    ``order_col`` if given).  Existing rows for *touched partitions
-    only* are read back, anti-joined on the key, and the union is
-    written with dynamic partition overwrite — untouched partitions
-    are never rewritten.
+    dedup_on: DedupKeys | None
+    fn: Callable[[DataFrame], DataFrame] = lambda rows: rows
 
-    NOT crash-atomic: the per-partition overwrite can tear if the
-    writer dies mid-rewrite.  Where that matters (it does on object
-    stores), use ``txn.AtomicParquetTable.upsert`` — same MERGE
-    semantics behind an atomic commit.
-    """
-    spark = batch_df.sparkSession
+    def view(self, spark, path: str, **read) -> DataFrame:
+        return self.fn(CommitLog(path).rows(spark, dedup_on=self.dedup_on, **read))
 
-    # dedup within the batch (replay / duplicate events)
-    order = F.col(order_col).desc() if order_col else F.monotonically_increasing_id().desc()
-    w = W.partitionBy(*keys).orderBy(order)
-    deduped = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    # Hadoop FS probe, not os.path — the table may live on s3a://hdfs://
-    if fs_exists(spark, table_path):
-        existing = spark.read.parquet(table_path)
-        touched = deduped.select(partition_col).distinct()
-        # rows already in the touched partitions that are NOT replaced
-        kept = (
-            existing.join(F.broadcast(touched), partition_col, "left_semi")
-            .join(deduped.select(*keys).distinct(), keys, "left_anti")
+    def compact(self, spark, path: str, quiesced: bool = True) -> None:
+        CommitLog(path).compact(
+            spark, self.fn, dedup_on=self.dedup_on, quiesced=quiesced
         )
-        out = kept.unionByName(deduped, allowMissingColumns=True)
-    else:
-        out = deduped
-    (
-        out.write.mode("overwrite")
-        # per-write option, NOT session conf: no cross-query leakage
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_path)
+
+
+def _sums(keys: list[str], *cols: str) -> _Fold:
+    """Fold of sum-mergeable partials: per-commit dedup on ``keys``,
+    then cell-wise BIGINT sums of ``cols``."""
+    return _Fold(
+        keys,
+        lambda rows: rows.groupBy(*keys).agg(
+            *(F.sum(c).cast("long").alias(c) for c in cols)
+        ),
     )
 
 
@@ -100,165 +77,26 @@ def with_partition_bucket(
 ) -> DataFrame:
     """Bounded partition key: hash-bucket of the stream id.  Partitioning
     a 100 TB table by raw stream_id means millions of directories (a
-    catalog/listing disaster) and single-stream batches rewriting one
+    catalog/listing disaster) and single-stream batches writing one
     tiny file per stream.  A fixed bucket count keeps partition dirs
     bounded while per-stream reads still prune: filter on
     ``part_bucket = pmod(xxhash64(id), buckets)`` + the id itself."""
     return df.withColumn("part_bucket", F.pmod(F.xxhash64(key_col), F.lit(buckets)))
 
 
-def make_live_sink(metadata_path: str, chunks_path: str):
-    """Copy-on-write variant of the live-path foreachBatch body
-    (reference process_live_batch, spark_streaming.py:519-539, minus
-    the collect()): dedup-upsert the per-chunk metadata, append the
-    chunk objects.  Both sinks partition on the bounded hash bucket,
-    not the raw stream id.  ``make_live_log_sink`` is the DEFAULT live
-    path — crash-atomic and O(batch) per commit; this COW variant
-    trades that for zero read-time merge."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = with_partition_bucket(batch_df).persist()
-        try:
-            upsert_partitioned(
-                batch_df,
-                metadata_path,
-                keys=["stream_id", "chunk_index"],
-                partition_col="part_bucket",
-                order_col="sequence_number",
-            )
-            append_chunk_objects(
-                batch_df.select(
-                    "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
-                ),
-                chunks_path,
-                partition_col="part_bucket",
-            )
-        finally:
-            batch_df.unpersist()
-
-    return sink
-
-
 # ----------------------------------------------------- merge-on-read log
 
 def append_log_upsert(batch_df: DataFrame, table_path: str, batch_id: int) -> None:
-    """Merge-on-read upsert: O(batch) append of the rows stamped with
-    the commit id — no read-modify-write on the hot path (the
-    copy-on-write ``upsert_partitioned`` pays a partition rewrite per
-    batch, which at high commit rates dominates; this is the
-    Hudi-MOR/Delta-CDF shape).  Readers resolve the latest row per key
-    via ``latest_view``; ``compact_log`` folds the log back to one row
-    per key when read amplification grows.  The append itself is a
-    crash-atomic ``AtomicParquetTable`` commit: files written by a
-    dying batch are invisible until the manifest rename lands."""
-    AtomicParquetTable(table_path).append(
-        batch_df.withColumn("__commit", F.lit(batch_id))
-    )
+    """Merge-on-read upsert: O(batch) crash-atomic append of the rows
+    stamped with the commit id — no read-modify-write on the hot path
+    (the Hudi-MOR/Delta-CDF shape).  Readers resolve the latest row per
+    key via ``latest_view``; ``compact_log`` folds the log back to one
+    row per key when read amplification grows."""
+    CommitLog(table_path).append(batch_df, batch_id)
 
 
-def _drop_replays_behind_watermark(log: DataFrame) -> DataFrame:
-    """Replay guard for logs compacted ONLINE (``quiesced=False``):
-    folded rows encode the highest batch id they absorbed as
-    ``__commit = -(wm + 2)``; a batch the stream replays after a crash
-    re-appends under its ORIGINAL id <= wm, and since its first copy
-    was folded away, per-commit dedup alone can no longer drop it.
-    This filter can: keep folded rows (negative) and live rows with
-    ``__commit > wm`` only.  Quiesced compaction stamps -1, which
-    decodes to wm = -1 — every live row passes, today's semantics.
-    The watermark is derived IN-PLAN (tiny aggregate, broadcast back);
-    no driver-side collect."""
-    wm = log.agg(
-        F.coalesce(
-            F.max(F.when(F.col("__commit") < -1, -F.col("__commit") - 2)),
-            F.lit(-1),
-        ).alias("__wm")
-    )
-    return (
-        log.crossJoin(F.broadcast(wm))
-        .filter((F.col("__commit") < 0) | (F.col("__commit") > F.col("__wm")))
-        .drop("__wm")
-    )
-
-
-def _stamp_folded(resolved: DataFrame, log: DataFrame, quiesced: bool) -> DataFrame:
-    """Attach the ``__commit`` stamp compaction puts on folded rows.
-
-    Quiesced (default): -1 — folded history can never collide with a
-    stream restarted on a FRESH checkpoint (ids restart at 0), which
-    is the supported restart path after an offline compaction.
-
-    Online (``quiesced=False``): -(wm + 2) where wm is the highest
-    batch id being folded (carried forward across successive online
-    folds) — safe to run UNDER a live stream, because a replayed
-    uncheckpointed batch (id <= wm) is dropped by
-    ``_drop_replays_behind_watermark`` while future batches (id > wm)
-    merge normally.  Before restarting on a fresh checkpoint, run one
-    quiesced compaction to reset the stamp to -1.  The watermark is a
-    tiny in-plan aggregate broadcast onto the folded rows."""
-    if quiesced:
-        return resolved.withColumn("__commit", F.lit(-1))
-    wm = log.agg(
-        F.coalesce(
-            F.max(
-                F.when(F.col("__commit") >= 0, F.col("__commit")).otherwise(
-                    -F.col("__commit") - 2
-                )
-            ),
-            F.lit(-1),
-        ).alias("__fold_wm")
-    )
-    return (
-        resolved.crossJoin(F.broadcast(wm))
-        .withColumn("__commit", -(F.col("__fold_wm") + F.lit(2)))
-        .drop("__fold_wm")
-    )
-
-
-def _read_log(spark, table_path: str) -> DataFrame:
-    log = AtomicParquetTable(table_path).read(spark)
-    if log is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    return log
-
-
-def _compact(spark, table_path: str, fold_of, quiesced: bool) -> None:
-    """Shared compaction driver: resolve ONE version, read exactly that
-    snapshot, build the fold AND the watermark from that single
-    DataFrame, and publish with compare-and-swap at version+1.
-
-    The CAS is what makes online compaction sound: without it, a batch
-    the live stream commits between the fold's read and the overwrite
-    would be silently dropped (the new manifest references only the
-    folded files), and a batch appended between two independent reads
-    could be folded yet excluded from the watermark — re-admitting its
-    replay.  With the pinned snapshot neither interleaving exists, and
-    a concurrent commit surfaces as txn.ConcurrentWriteError with the
-    table untouched — the caller simply re-runs compaction."""
-    table = AtomicParquetTable(table_path)
-    version = table.version(spark)
-    if version == 0:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    log = table.read(spark, version=version)
-    folded = _stamp_folded(fold_of(log), log, quiesced)
-    table.overwrite(folded, expect_version=version)
-    table.vacuum(spark)
-
-
-def _latest_view_of(
-    log: DataFrame, keys: list[str], order_col: str | None = None
-) -> DataFrame:
-    log = _drop_replays_behind_watermark(log)
-    order = [F.col("__commit").desc()] + (
-        [F.col(order_col).desc()] if order_col else []
-    )
-    w = W.partitionBy(*keys).orderBy(*order)
-    return (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__commit")
-    )
+def _desc(order_col: str | None) -> list:
+    return [F.col(order_col).desc()] if order_col else []
 
 
 def latest_view(
@@ -266,10 +104,8 @@ def latest_view(
 ) -> DataFrame:
     """Last-writer-wins view over the append log: one row per key,
     newest commit (then ``order_col``) winning — the read-side half of
-    merge-on-read.  Replays of batches folded by an online compaction
-    are dropped via the in-band watermark (see
-    ``_drop_replays_behind_watermark``)."""
-    return _latest_view_of(_read_log(spark, table_path), keys, order_col)
+    merge-on-read."""
+    return CommitLog(table_path).rows(spark, latest_on=keys, order=_desc(order_col))
 
 
 def compact_log(
@@ -279,50 +115,31 @@ def compact_log(
     order_col: str | None = None,
     quiesced: bool = True,
 ) -> None:
-    """Fold the log to one row per key (the background compaction that
-    bounds read amplification).  The rewrite is an atomic ``overwrite``
-    commit — a crash mid-compaction leaves the uncompacted log fully
-    intact — and superseded files are vacuumed only after the new
-    version is live.
-
-    Folded rows carry ``__commit=-1`` (as in compact_rollup /
-    compact_index): a stream restarted on a FRESH checkpoint replays
-    batch 0, and a folded row stamped 0 would tie with the replayed
-    batch in latest_view's ordering — the stale compacted row could
-    nondeterministically win.  -1 always loses to any live batch.
-
-    With the default ``quiesced=True`` the log must be quiesced and
-    fully checkpointed when compaction runs — if the stream appended a
-    batch whose checkpoint commit had not landed when compaction
-    folded it, the restarted stream re-appends that batch under its
-    original id and per-commit dedup cannot drop it (the original
-    rows were folded into -1).  ``quiesced=False`` lifts that
-    requirement for a LIVE stream: the fold stamps the in-band
-    watermark instead (see ``_stamp_folded``) and the views drop such
-    replays.  Fold, watermark, and publish all pin ONE snapshot with a
-    CAS commit (see ``_compact``)."""
-    _compact(
-        spark,
-        table_path,
-        lambda log: _latest_view_of(log, keys, order_col),
-        quiesced,
+    """Fold the log to one row per key.  Folded rows carry a negative
+    stamp, so a stream restarted on a FRESH checkpoint (batch ids from
+    0 again) always beats compacted history in ``latest_view`` — a
+    0-stamped fold would tie with the replayed batch 0 and the stale
+    row could nondeterministically win."""
+    CommitLog(table_path).compact(
+        spark, latest_on=keys, order=_desc(order_col), quiesced=quiesced
     )
 
 
 def make_live_log_sink(metadata_path: str, chunks_path: str):
-    """The DEFAULT live-path sink: merge-on-read log, so the per-batch
-    work is two appends — constant in table size, linear in batch
-    size — and the metadata append is a crash-atomic commit.  The
+    """The live-path foreachBatch body (reference process_live_batch,
+    spark_streaming.py:519-539, minus the collect()): two appends per
+    micro-batch — constant in table size, linear in batch size.  The
+    metadata append is a crash-atomic commit-log append; the
     chunk-object append stays a plain file append by design: it models
     per-object PUTs (each object is atomic on its own, reference
-    spark_streaming.py:300-320), not a table mutation."""
+    spark_streaming.py:300-320), not a table mutation, and partitions
+    on the bounded hash bucket, not the raw stream id."""
+    log = CommitLog(metadata_path)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = with_partition_bucket(batch_df).persist()
         try:
-            append_log_upsert(batch_df, metadata_path, batch_id)
+            log.append(batch_df, batch_id)
             append_chunk_objects(
                 batch_df.select(
                     "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
@@ -333,7 +150,7 @@ def make_live_log_sink(metadata_path: str, chunks_path: str):
         finally:
             batch_df.unpersist()
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
 # ---------------------------------------------------- incremental rollup
@@ -351,78 +168,34 @@ def make_rollup_sink(
     per-batch cost is O(batch) and the rollup table is never read on
     the write path.  Readers merge partials with ``rollup_view``;
     ``compact_rollup`` folds the log when partial-row amplification
-    grows.  Append is an AtomicParquetTable commit, and every partial
-    row carries its batch id, so a replayed batch (foreachBatch
-    at-least-once) deduplicates exactly at read time."""
+    grows."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.groupBy(
-                *key_cols, F.window(time_col, window).alias("__w")
-            )
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.groupBy(*key_cols, F.window(time_col, window).alias("__w"))
             .agg(
                 F.count("*").alias("n_events"),
                 F.sum(value_col).alias("value_sum"),
             )
-            .select(
-                *key_cols,
-                F.col("__w.start").alias("bucket"),
-                "n_events",
-                "value_sum",
-            )
-        )
-        AtomicParquetTable(rollup_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
+            .select(*key_cols, F.col("__w.start").alias("bucket"), "n_events", "value_sum")
         )
 
-    return sink
+    return CommitLog(rollup_path).sink(partial)
+
+
+def _rollup(key_cols: list[str]) -> _Fold:
+    return _sums([*key_cols, "bucket"], "n_events", "value_sum")
 
 
 def rollup_view(spark, rollup_path: str, key_cols: list[str]) -> DataFrame:
-    """Merged rollup: sum the partial aggregates per (key, bucket).
-    Replayed batches are deduplicated by (commit, key, bucket) first —
-    a retried foreachBatch recomputes the identical partial row, so
-    keeping one copy per commit makes the view exactly-once."""
-    return _rollup_view_of(_read_log(spark, rollup_path), key_cols)
-
-
-def _rollup_view_of(log: DataFrame, key_cols: list[str]) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *key_cols, "bucket"])
-        .groupBy(*key_cols, "bucket")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_sum").cast("long").alias("value_sum"),
-        )
-    )
+    """Merged rollup: sum the partial aggregates per (key, bucket)."""
+    return _rollup(key_cols).view(spark, rollup_path)
 
 
 def compact_rollup(
     spark, rollup_path: str, key_cols: list[str], quiesced: bool = True
 ) -> None:
-    """Fold the partial-aggregate log to one row per (key, bucket);
-    atomic overwrite, crash leaves the uncompacted log intact.
-    Quiesced folds carry __commit=-1: foreachBatch batch ids are
-    always >= 0, so a stream restarted on a FRESH checkpoint (batch
-    ids starting over at 0) can never collide with compacted history
-    in the per-commit dedup.
-
-    The default requires a quiesced, fully-checkpointed log: folding
-    an appended-but-uncheckpointed batch loses its __commit identity,
-    so the stream's replay of that batch re-appends rows the
-    per-commit dedup can no longer match — partials double-count.
-    ``quiesced=False`` makes compaction safe UNDER a live stream
-    instead: the fold stamps the in-band replay watermark
-    (``_stamp_folded``) and the views drop replayed batches behind it.
-    (Same contract for compact_index and compact_log.)  Fold,
-    watermark, and publish all pin ONE snapshot with a CAS commit
-    (see ``_compact``)."""
-    _compact(
-        spark, rollup_path, lambda log: _rollup_view_of(log, key_cols), quiesced
-    )
+    _rollup(key_cols).compact(spark, rollup_path, quiesced)
 
 
 # ------------------------------------------------ incremental inverted index
@@ -437,49 +210,36 @@ def make_index_sink(
     searchable index): each micro-batch appends its PARTIAL per-term
     (df, postings) rows — df sums and posting lists concatenate, so
     both are mergeable, per-batch cost is O(batch), and the index is
-    never read on the write path.  Same log shape as make_rollup_sink:
-    every partial row carries its batch id, a replayed batch
-    (foreachBatch at-least-once) recomputes the identical partial and
-    deduplicates at read time, and the append is an atomic commit.
+    never read on the write path.
 
     Assumes each document arrives in exactly one batch (an append-only
     corpus stream); upstream dedup handles re-crawls."""
     from ..operators.retrieval import inverted_index
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = inverted_index(
+    return CommitLog(index_path).sink(
+        lambda batch_df: inverted_index(
             batch_df, text_col=text_col, id_col=id_col, min_token_len=min_token_len
         ).select("term", "df", "postings")
-        AtomicParquetTable(index_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
+    )
 
-    return sink
+
+_INDEX = _Fold(
+    ["term"],
+    lambda rows: rows.groupBy("term").agg(
+        F.sum("df").cast("long").alias("df"),
+        F.array_sort(F.flatten(F.collect_list("postings"))).alias("postings"),
+    ),
+)
 
 
 def index_view(
     spark, index_path: str, max_postings: int | None = None
 ) -> DataFrame:
     """Merged inverted index: sum partial dfs and concat+sort partial
-    posting lists per term, after per-commit dedup (exactly-once under
-    replay).  ``max_postings`` applies the same stopword truncation cap
-    as operators.retrieval.inverted_index, with df staying exact;
-    the output schema matches inverted_index exactly."""
-    return _index_view_of(_read_log(spark, index_path), max_postings)
-
-
-def _index_view_of(log: DataFrame, max_postings: int | None = None) -> DataFrame:
-    merged = (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "term"])
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.array_sort(F.flatten(F.collect_list("postings"))).alias("postings"),
-        )
-    )
+    posting lists per term.  ``max_postings`` applies the same stopword
+    truncation cap as operators.retrieval.inverted_index, with df
+    staying exact; the output schema matches inverted_index exactly."""
+    merged = _INDEX.view(spark, index_path)
     if max_postings is not None:
         return merged.select(
             "term",
@@ -491,19 +251,7 @@ def _index_view_of(log: DataFrame, max_postings: int | None = None) -> DataFrame
 
 
 def compact_index(spark, index_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-index log to one row per term; atomic
-    overwrite, crash leaves the uncompacted log intact.  Quiesced
-    folds stamp __commit=-1 for the same fresh-checkpoint-restart
-    reason as compact_rollup; ``quiesced=False`` stamps the in-band
-    replay watermark so compaction is safe under a live stream (see
-    compact_rollup's docstring for the full contract; pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(
-        spark,
-        index_path,
-        lambda log: _index_view_of(log).select("term", "df", "postings"),
-        quiesced,
-    )
+    _INDEX.compact(spark, index_path, quiesced)
 
 
 # ------------------------------------------------ incremental IVF ANN index
@@ -520,42 +268,27 @@ def make_ivf_sink(
     in every production IVF system); each micro-batch assigns its
     vectors with the broadcast argmax (shuffle-free) and APPENDS
     (cell, neighbor_id, v) rows — O(batch) per batch, the index is
-    never read on the write path.  Same log contract as
-    make_rollup_sink/make_index_sink: every row carries its batch id,
-    replays dedupe at read time, appends are atomic commits."""
+    never read on the write path."""
     from ..operators.similarity import _as_double, nearest_cells
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        cents = spark.read.parquet(f"{index_path}/centroids")
+    def partial(batch_df: DataFrame) -> DataFrame:
+        cents = batch_df.sparkSession.read.parquet(f"{index_path}/centroids")
         c = batch_df.select(
             F.col(id_col).alias("neighbor_id"),
             _as_double(F.col(vec_col)).alias("v"),
         )
-        assigned = nearest_cells(c, cents, 1, "cell")
-        AtomicParquetTable(f"{index_path}/postings_log").append(
-            assigned.withColumn("__commit", F.lit(batch_id))
-        )
+        return nearest_cells(c, cents, 1, "cell")
 
-    return sink
+    return CommitLog(f"{index_path}/postings_log").sink(partial)
+
+
+_IVF = _Fold(["neighbor_id"], lambda rows: rows.select("cell", "neighbor_id", "v"))
 
 
 def ivf_stream_view(spark, index_path: str) -> DataFrame:
-    """Merged streaming postings: per-commit dedup (exactly-once under
-    replay, with the online-compaction watermark honored) → the
-    (cell, neighbor_id, v) frame ``ivf_search_postings`` scores
-    against."""
-    return _ivf_view_of(_read_log(spark, f"{index_path}/postings_log"))
-
-
-def _ivf_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "neighbor_id"])
-        .select("cell", "neighbor_id", "v")
-    )
+    """Merged streaming postings → the (cell, neighbor_id, v) frame
+    ``ivf_search_postings`` scores against."""
+    return _IVF.view(spark, f"{index_path}/postings_log")
 
 
 def ivf_stream_search(
@@ -572,10 +305,7 @@ def ivf_stream_search(
 
 
 def compact_ivf(spark, index_path: str, quiesced: bool = True) -> None:
-    """Fold the postings log to one row per vector; atomic overwrite.
-    Same quiesced/online contract as compact_rollup (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, f"{index_path}/postings_log", _ivf_view_of, quiesced)
+    _IVF.compact(spark, f"{index_path}/postings_log", quiesced)
 
 
 # ------------------------------------------- incremental count-min sketch
@@ -585,42 +315,23 @@ def make_cms_sink(sketch_path: str, term_col: str = "term"):
     frequencies → bounded-size frequency oracle): each micro-batch
     appends its PARTIAL counter matrix — depth*width rows regardless
     of batch size, cell-wise additive, so the merged sketch equals the
-    batch-built sketch over all data (count-min is exactly mergeable).
-    Same log contract as make_rollup_sink: per-commit replay dedup,
-    atomic appends, online-compaction watermark honored."""
+    batch-built sketch over all data (count-min is exactly mergeable)."""
     from ..operators.sketches import cms_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = cms_build(batch_df, term_col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
+    return CommitLog(sketch_path).sink(lambda batch_df: cms_build(batch_df, term_col))
 
-    return sink
+
+_CMS = _sums(["depth", "slot"], "cnt")
 
 
 def cms_view(spark, sketch_path: str) -> DataFrame:
-    """Merged sketch: cell-wise sum of the partial counter matrices
-    after per-commit dedup — feed to operators.sketches.cms_estimate."""
-    return _cms_view_of(_read_log(spark, sketch_path))
-
-
-def _cms_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "depth", "slot"])
-        .groupBy("depth", "slot")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    """Merged sketch: cell-wise sum of the partial counter matrices —
+    feed to operators.sketches.cms_estimate."""
+    return _CMS.view(spark, sketch_path)
 
 
 def compact_cms(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-sketch log to one counter matrix; same
-    quiesced/online contract as the other compactors (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, sketch_path, _cms_view_of, quiesced)
+    _CMS.compact(spark, sketch_path, quiesced)
 
 
 # -------------------------------------------- streaming heavy hitters
@@ -647,19 +358,13 @@ def make_heavy_hitters_sink(
     floor occurrences per batch becomes a candidate on its first such
     batch.  A term below BOTH nets in every batch still escapes —
     that residual failure mode is inherent to bounded candidate
-    tracking (tested in test_streaming.py).
+    tracking (tested in test_streaming.py)."""
+    from ..operators.sketches import cms_build
 
-    Same replay contract as the underlying CMS sink; the candidate log
-    dedups per commit and a replayed batch re-appends an identical
-    candidate set."""
-    from pyspark.sql import functions as F
+    cms, cands = CommitLog(f"{path}/cms"), CommitLog(f"{path}/cands")
 
-    cms_sink = make_cms_sink(f"{path}/cms", term_col)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cms_sink(batch_df, batch_id)
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        cms.append(cms_build(batch_df, term_col), batch_id)
         counts = batch_df.groupBy(term_col).agg(F.count("*").alias("__cnt"))
         top = (
             counts.orderBy(F.desc("__cnt"), F.asc(term_col))
@@ -670,11 +375,9 @@ def make_heavy_hitters_sink(
             top = top.union(
                 counts.filter(F.col("__cnt") >= candidate_floor).select(term_col)
             ).distinct()
-        AtomicParquetTable(f"{path}/cands").append(
-            top.withColumn("__commit", F.lit(batch_id))
-        )
+        cands.append(top, batch_id)
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
 def heavy_hitters_view(
@@ -685,12 +388,8 @@ def heavy_hitters_view(
     and the 1024-cell sketch — no raw data."""
     from ..operators.sketches import cms_estimate
 
-    cands = (
-        _drop_replays_behind_watermark(_read_log(spark, f"{path}/cands"))
-        .select(term_col)
-        .distinct()
-    )
-    est = cms_estimate(_cms_view_of(_read_log(spark, f"{path}/cms")), cands)
+    cands = CommitLog(f"{path}/cands").rows(spark).select(term_col).distinct()
+    est = cms_estimate(_CMS.view(spark, f"{path}/cms"), cands)
     return est.orderBy(F.desc("cms_estimate"), F.asc(term_col)).limit(k)
 
 
@@ -700,11 +399,8 @@ def compact_heavy_hitters(
     """Compact both logs: fold the sketch cell-wise and the candidate
     log to its distinct terms."""
     compact_cms(spark, f"{path}/cms", quiesced)
-    _compact(
-        spark,
-        f"{path}/cands",
-        lambda log: _drop_replays_behind_watermark(log).select(term_col).distinct(),
-        quiesced,
+    CommitLog(f"{path}/cands").compact(
+        spark, lambda rows: rows.select(term_col).distinct(), quiesced=quiesced
     )
 
 
@@ -718,42 +414,31 @@ def make_hll_sink(sketch_path: str, keys: list[str], col: str):
     just mergeable but IDEMPOTENT — a replayed batch's registers
     cannot inflate the estimate even without commit dedup — so this is
     the most replay-tolerant sink in the family; the per-commit dedup
-    is kept anyway for log-size hygiene and the shared compaction
-    contract.  Estimates come from
+    is kept anyway for log-size hygiene.  Estimates come from
     operators.sketches.hll_portable_estimate over the merged view,
     identical to the batch-built sketch (the x89 mergeability law)."""
     from ..operators.sketches import hll_portable_registers
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = hll_portable_registers(batch_df, keys, col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def hll_stream_view(spark, sketch_path: str, keys: list[str]) -> DataFrame:
-    """Merged registers: per-commit dedup then max(rho) per (keys,
-    bucket) — feed to operators.sketches.hll_portable_estimate."""
-    return _hll_view_of(_read_log(spark, sketch_path), keys)
-
-
-def _hll_view_of(log: DataFrame, keys: list[str]) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *keys, "bucket"])
-        .groupBy(*keys, "bucket")
-        .agg(F.max("rho").alias("rho"))
+    return CommitLog(sketch_path).sink(
+        lambda batch_df: hll_portable_registers(batch_df, keys, col)
     )
 
 
+def _hll(keys: list[str]) -> _Fold:
+    return _Fold(
+        [*keys, "bucket"],
+        lambda rows: rows.groupBy(*keys, "bucket").agg(F.max("rho").alias("rho")),
+    )
+
+
+def hll_stream_view(spark, sketch_path: str, keys: list[str]) -> DataFrame:
+    """Merged registers: max(rho) per (keys, bucket) — feed to
+    operators.sketches.hll_portable_estimate."""
+    return _hll(keys).view(spark, sketch_path)
+
+
 def compact_hll(spark, sketch_path: str, keys: list[str], quiesced: bool = True) -> None:
-    """Fold the register log to one row set per (keys, bucket); same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, lambda log: _hll_view_of(log, keys), quiesced)
+    _hll(keys).compact(spark, sketch_path, quiesced)
 
 
 def make_kmv_sink(sketch_path: str, keys: list[str], col: str, k: int = 64):
@@ -764,31 +449,26 @@ def make_kmv_sink(sketch_path: str, keys: list[str], col: str, k: int = 64):
     rows regardless of batch size.  KMV union is the k smallest of
     the union — min-like, hence IDEMPOTENT under replay exactly like
     HLL's register max: a re-appended batch cannot perturb the merged
-    bottom-k.  Per-commit hygiene and the shared compaction contract
-    are kept anyway (compact_kmv)."""
+    bottom-k."""
     from ..operators.sketches import kmv_partial_rows
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = kmv_partial_rows(batch_df, keys, F.col(col), k)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
+    return CommitLog(sketch_path).sink(
+        lambda batch_df: kmv_partial_rows(batch_df, keys, F.col(col), k)
+    )
+
+
+def _kmv(keys: list[str], k: int) -> _Fold:
+    def bottom_k(rows: DataFrame) -> DataFrame:
+        w = W.partitionBy(*keys).orderBy("h")
+        return (
+            rows.select(*keys, "h")
+            .distinct()
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .drop("__rn")
         )
 
-    return sink
-
-
-def _kmv_view_of(log: DataFrame, keys: list[str], k: int) -> DataFrame:
-    deduped = (
-        _drop_replays_behind_watermark(log).select(*keys, "h").distinct()
-    )
-    w = W.partitionBy(*keys).orderBy("h")
-    return (
-        deduped.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _Fold(None, bottom_k)
 
 
 def kmv_stream_view(spark, sketch_path: str, keys: list[str], k: int = 64) -> DataFrame:
@@ -796,16 +476,14 @@ def kmv_stream_view(spark, sketch_path: str, keys: list[str], k: int = 64) -> Da
     kmv_sketch_by over all data ever logged — feed straight to
     kmv_overlap_matrix for the continuously-maintained source-overlap
     report."""
-    rows = _kmv_view_of(_read_log(spark, sketch_path), keys, k)
+    rows = _kmv(keys, k).view(spark, sketch_path)
     return rows.groupBy(*keys).agg(F.array_sort(F.collect_list("h")).alias("kmv"))
 
 
 def compact_kmv(
     spark, sketch_path: str, keys: list[str], k: int = 64, quiesced: bool = True
 ) -> None:
-    """Fold the hash log to the current per-group bottom-k rows; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, lambda log: _kmv_view_of(log, keys, k), quiesced)
+    _kmv(keys, k).compact(spark, sketch_path, quiesced)
 
 
 # ---------------------------------------- streaming corpus datasheet
@@ -818,15 +496,13 @@ def make_datasheet_sink(path: str):
     md5 fingerprints, because distinct-count is NOT sum-mergeable and
     at 100 TB the fingerprint set cannot be kept; the register sketch
     is the standard fix.  Both logs are bounded per batch (sources x
-    1 row; sources x 256 registers) and share the replay/compaction
-    contract."""
+    1 row; sources x 256 registers)."""
     from ..operators import text as tx
+    from ..operators.sketches import hll_portable_registers
 
-    hll = make_hll_sink(f"{path}/fps", ["source"], "__fp")
+    sums, fps = CommitLog(f"{path}/sums"), CommitLog(f"{path}/fps")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         t = F.col("text")
         per = batch_df.select(
             "source",
@@ -835,32 +511,22 @@ def make_datasheet_sink(path: str):
             (tx.lang_id(t) == "en").cast("long").alias("is_en"),
             tx.fingerprint(t).alias("__fp"),
         )
-        sums = per.groupBy("source").agg(
+        partial = per.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
             F.sum("hi_q").alias("hi_q_docs"),
             F.sum("is_en").alias("en_docs"),
         )
-        AtomicParquetTable(f"{path}/sums").append(
-            sums.withColumn("__commit", F.lit(batch_id))
+        sums.append(partial, batch_id)
+        fps.append(
+            hll_portable_registers(per.select("source", "__fp"), ["source"], "__fp"),
+            batch_id,
         )
-        hll(per.select("source", "__fp"), batch_id)
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
-def _datasheet_sums_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "source"])
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-            F.sum("hi_q_docs").cast("long").alias("hi_q_docs"),
-            F.sum("en_docs").cast("long").alias("en_docs"),
-        )
-    )
+_DATASHEET_SUMS = _sums(["source"], "n_docs", "total_tokens", "hi_q_docs", "en_docs")
 
 
 def datasheet_view(spark, path: str) -> DataFrame:
@@ -869,9 +535,9 @@ def datasheet_view(spark, path: str) -> DataFrame:
     source.  Touches only the two small logs, never raw documents."""
     from ..operators.sketches import hll_portable_estimate
 
-    sums = _datasheet_sums_of(_read_log(spark, f"{path}/sums"))
+    sums = _DATASHEET_SUMS.view(spark, f"{path}/sums")
     fps = hll_portable_estimate(
-        _hll_view_of(_read_log(spark, f"{path}/fps"), ["source"]), ["source"]
+        hll_stream_view(spark, f"{path}/fps", ["source"]), ["source"]
     ).select("source", F.col("approx_distinct").alias("approx_distinct_fps"))
     n = F.col("n_docs").cast("double")
     return sums.join(fps, "source").select(
@@ -897,8 +563,8 @@ def datasheet_view(spark, path: str) -> DataFrame:
 
 
 def compact_datasheet(spark, path: str, quiesced: bool = True) -> None:
-    """Fold both datasheet logs; same contract as the other sinks."""
-    _compact(spark, f"{path}/sums", _datasheet_sums_of, quiesced)
+    """Fold both datasheet logs."""
+    _DATASHEET_SUMS.compact(spark, f"{path}/sums", quiesced)
     compact_hll(spark, f"{path}/fps", ["source"], quiesced)
 
 
@@ -911,56 +577,45 @@ def make_dd_sink(sketch_path: str, value_col: str, keys: list[str] | None = None
     sized regardless of batch size, bucket-wise additive, so the
     merged sketch equals the batch-built sketch over all data
     (DDSketch merge is exact).  The streaming answer to "p99 latency
-    right now" without ever re-scanning history.  Same log contract
-    as make_cms_sink: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    right now" without ever re-scanning history."""
     from ..operators.sketches import dd_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = dd_build(batch_df, value_col, keys=keys)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
+    return CommitLog(sketch_path).sink(
+        lambda batch_df: dd_build(batch_df, value_col, keys=keys)
+    )
 
 
-def dd_stream_view(spark, sketch_path: str) -> DataFrame:
-    """Merged sketch: bucket-wise sum of the partials after per-commit
-    dedup — feed to operators.sketches.dd_quantiles.  Sketch keys are
-    derived from the log's own columns (everything that is not
-    bucket/cnt/__commit), so a keyed sketch can never be silently
-    folded without its keys."""
-    return _dd_view_of(_read_log(spark, sketch_path))
-
-
-def _dd_view_of(log: DataFrame) -> DataFrame:
-    if "sgn" not in log.columns:
+def _dd_merge(rows: DataFrame) -> DataFrame:
+    if "sgn" not in rows.columns:
         # state-format migration: sketch logs persisted before the
         # mirrored negative store carried only positive buckets, with
         # the exact-zero bucket encoded as bucket NULL — derive the
         # sgn column on read so old stores keep working (they never
         # held negative values, so sgn=1/0 reconstructs them exactly)
-        log = log.withColumn(
+        rows = rows.withColumn(
             "sgn",
             F.when(F.col("bucket").isNotNull(), F.lit(1)).otherwise(F.lit(0)),
         )
-    keys = [c for c in log.columns if c not in ("sgn", "bucket", "cnt", "__commit")]
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *keys, "sgn", "bucket"])
-        .groupBy(*keys, "sgn", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    keys = [c for c in rows.columns if c not in ("sgn", "bucket", "cnt")]
+    return rows.groupBy(*keys, "sgn", "bucket").agg(
+        F.sum("cnt").cast("long").alias("cnt")
     )
 
 
+# sketch keys are every column but the count, derived from the log's
+# own schema, so a keyed sketch can never be silently folded without
+# its keys
+_DD = _Fold(lambda cols: [c for c in cols if c != "cnt"], _dd_merge)
+
+
+def dd_stream_view(spark, sketch_path: str) -> DataFrame:
+    """Merged sketch: bucket-wise sum of the partials — feed to
+    operators.sketches.dd_quantiles."""
+    return _DD.view(spark, sketch_path)
+
+
 def compact_dd(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-sketch log to one bucket table (keys derived
-    from the log's columns, like dd_stream_view); same quiesced/online
-    contract as the other compactors."""
-    _compact(spark, sketch_path, _dd_view_of, quiesced)
+    _DD.compact(spark, sketch_path, quiesced)
 
 
 # ------------------------------------ streaming seasonal anomalies
@@ -974,19 +629,17 @@ def make_seasonal_sink(
     micro-batch appends its partial per-(type, hour) event counts —
     counts are bucket-wise additive, so the merged state equals the
     batch-built hourly series exactly, and the per-batch cost is
-    O(batch).  Same log contract as make_rollup_sink: per-commit
-    replay dedup, atomic appends, online-compaction watermark.
+    O(batch).
 
     The sink maintains the SPARSE hourly counts, not the scored
     anomalies: zero-filling needs the global observed range and the
     leave-one-out slot baselines shift with every new hour, so scoring
-    happens at read time (``seasonal_view``) over the tiny hours x
-    types state — where it reuses the batch operator's exact plan."""
+    happens at read time (``seasonal_view`` and its sibling detectors)
+    over the tiny hours x types state — where it reuses the batch
+    operator's exact plan."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.groupBy(
                 F.col(type_col).alias("t"),
                 F.window(time_col, "1 hour").alias("__w"),
@@ -994,55 +647,53 @@ def make_seasonal_sink(
             .agg(F.count("*").alias("cnt"))
             .select("t", F.col("__w.start").alias("h"), "cnt")
         )
-        AtomicParquetTable(counts_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return CommitLog(counts_path).sink(partial)
 
 
-def _seasonal_sparse_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "t", "h"])
-        .groupBy("h", "t")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+_HOURLY = _sums(["h", "t"], "cnt")
 
 
-# frames the LAST seasonal_view call persisted (via densify_hourly's
-# tracked_persist) — released on the next call, so a long-running
-# monitoring loop re-reading the view holds at most one view's worth
-# of cached state instead of accumulating per read (Engine.clear_caches
-# is not reachable from this streaming read path)
+def _hourly_view(frames: list[DataFrame], spark, counts_path: str, score) -> DataFrame:
+    """Score the merged hourly-count state through a batch operator's
+    dense-grid core (``score``), so merged-view == batch operator is a
+    structural guarantee.  ``frames`` holds what the PREVIOUS call of
+    the same view persisted (densify_hourly's tracked_persist); it is
+    released first, so a long-running monitoring loop re-reading the
+    view holds at most one view's worth of cached state instead of
+    accumulating per read (Engine.clear_caches is not reachable from
+    this streaming read path)."""
+    from .. import cache
+    from ..operators.timeseries import densify_hourly
+
+    cache.release(frames)
+    frames.clear()
+    pos = cache.mark()
+    view = score(densify_hourly(_HOURLY.view(spark, counts_path)))
+    frames.extend(cache.tracked_since(pos))
+    return view
+
+
 _SEASONAL_VIEW_FRAMES: list[DataFrame] = []
 
 
 def seasonal_view(spark, counts_path: str, z_threshold: float = 2.0) -> DataFrame:
-    """Anomalies over the MERGED hourly state: per-commit dedup
-    (exactly-once under foreachBatch replay), then the dense grid +
+    """Anomalies over the MERGED hourly state: the dense grid +
     leave-one-out scoring runs through the IDENTICAL code path as the
-    batch operator (``seasonal_scores_from_dense``) — merged-view ==
-    batch-operator is a structural guarantee, tested with planted
-    outage + spike batches.  Each call scope-releases the hour-grid
-    frames the PREVIOUS call persisted (cache.release), bounding a
-    monitoring loop's cached state at one view."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, seasonal_scores_from_dense
+    batch operator (``seasonal_scores_from_dense``) — tested with
+    planted outage + spike batches."""
+    from ..operators.timeseries import seasonal_scores_from_dense
 
-    cache.release(_SEASONAL_VIEW_FRAMES)
-    _SEASONAL_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = seasonal_scores_from_dense(densify_hourly(sparse), z_threshold)
-    _SEASONAL_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view(
+        _SEASONAL_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: seasonal_scores_from_dense(dense, z_threshold),
+    )
 
 
 def compact_seasonal(spark, counts_path: str, quiesced: bool = True) -> None:
-    """Fold the hourly-count log to one row per (hour, type); same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, counts_path, _seasonal_sparse_of, quiesced)
+    _HOURLY.compact(spark, counts_path, quiesced)
 
 
 _ROBUST_VIEW_FRAMES: list[DataFrame] = []
@@ -1052,19 +703,15 @@ def robust_view(spark, counts_path: str, z_threshold: float = 3.5) -> DataFrame:
     """Median/MAD robust outliers over the SAME hourly-count store the
     seasonal sink maintains — the third detector served by the one
     rollup (seasonal = hour-of-day deviations, CUSUM = sustained
-    shifts, robust = contamination-proof point outliers).  Identical
-    code path as the batch operator; same replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, robust_scores_from_dense
+    shifts, robust = contamination-proof point outliers)."""
+    from ..operators.timeseries import robust_scores_from_dense
 
-    cache.release(_ROBUST_VIEW_FRAMES)
-    _ROBUST_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = robust_scores_from_dense(densify_hourly(sparse), z_threshold)
-    _ROBUST_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view(
+        _ROBUST_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: robust_scores_from_dense(dense, z_threshold),
+    )
 
 
 _CUSUM_VIEW_FRAMES: list[DataFrame] = []
@@ -1076,21 +723,85 @@ def cusum_view(
     """CUSUM level-shift detection over the SAME incrementally-
     maintained hourly-count store the seasonal sink writes — no new
     state format, the one rollup serves both detectors (seasonal =
-    hour-of-day deviations, CUSUM = sustained level shifts).  Scores
-    through the IDENTICAL code path as the batch operator
-    (``cusum_scores_from_dense``), so merged-view == batch is a
-    structural guarantee; same per-commit replay dedup and
-    scope-release cache bounds as ``seasonal_view``."""
-    from .. import cache
-    from ..operators.timeseries import cusum_scores_from_dense, densify_hourly
+    hour-of-day deviations, CUSUM = sustained level shifts)."""
+    from ..operators.timeseries import cusum_scores_from_dense
 
-    cache.release(_CUSUM_VIEW_FRAMES)
-    _CUSUM_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = cusum_scores_from_dense(densify_hourly(sparse), slack, threshold)
-    _CUSUM_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view(
+        _CUSUM_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: cusum_scores_from_dense(dense, slack, threshold),
+    )
+
+
+_DISPERSION_VIEW_FRAMES: list[DataFrame] = []
+
+
+def dispersion_view(spark, counts_path: str, threshold: float = 1.5) -> DataFrame:
+    """Fano-factor burstiness over the SAME hourly-count store the
+    seasonal sink maintains — the fourth detector on the one rollup
+    (seasonal deviations / CUSUM shifts / robust point outliers /
+    dispersion)."""
+    from ..operators.timeseries import dispersion_scores_from_dense
+
+    return _hourly_view(
+        _DISPERSION_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: dispersion_scores_from_dense(dense, threshold),
+    )
+
+
+_TREND_VIEW_FRAMES: list[DataFrame] = []
+
+
+def trend_view(spark, counts_path: str, z_crit: float = 1.96) -> DataFrame:
+    """Mann-Kendall trend + Sen's slope over the SAME hourly-count
+    store the seasonal sink maintains — the FIFTH detector on the one
+    rollup (seasonal deviations / CUSUM shifts / robust point
+    outliers / dispersion / monotonic trend)."""
+    from ..operators.timeseries import mann_kendall_from_dense
+
+    return _hourly_view(
+        _TREND_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: mann_kendall_from_dense(dense, z_crit),
+    )
+
+
+_ACF_VIEW_FRAMES: list[DataFrame] = []
+
+
+def acf_view(spark, counts_path: str, max_lag_hours: int = 24) -> DataFrame:
+    """Autocorrelation over the SAME hourly-count store — the SIXTH
+    consumer of the one rollup (four anomaly detectors + trend +
+    periodicity)."""
+    from ..operators.timeseries import acf_from_dense
+
+    return _hourly_view(
+        _ACF_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: acf_from_dense(dense, max_lag_hours),
+    )
+
+
+_HW_VIEW_FRAMES: list[DataFrame] = []
+
+
+def forecast_view(spark, counts_path: str, **hw_kwargs) -> DataFrame:
+    """Holt-Winters forecast over the SAME hourly-count store — the
+    SEVENTH consumer of the one rollup (detectors + trend +
+    periodicity + forecast)."""
+    from ..operators.timeseries import holt_winters_from_dense
+
+    return _hourly_view(
+        _HW_VIEW_FRAMES,
+        spark,
+        counts_path,
+        lambda dense: holt_winters_from_dense(dense, **hw_kwargs),
+    )
 
 
 # --------------------------------------- incremental signature history
@@ -1108,34 +819,24 @@ def make_signature_sink(
     (id, sig) rows — O(batch) per batch, the history is never read on
     the write path, and downstream near-dup checks
     (``neardup_stream_check``) match against ~128-byte signature rows
-    instead of re-reading corpus text.  Same log contract as the other
-    incremental sinks: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    instead of re-reading corpus text."""
     from ..operators.dedup import minhash_signatures
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sigs = minhash_signatures(batch_df, text_col, id_col, num_hashes, shingle_k)
-        AtomicParquetTable(history_path).append(
-            sigs.withColumn("__commit", F.lit(batch_id))
+    return CommitLog(history_path).sink(
+        lambda batch_df: minhash_signatures(
+            batch_df, text_col, id_col, num_hashes, shingle_k
         )
+    )
 
-    return sink
+
+def _signatures(id_col: str) -> _Fold:
+    return _Fold([id_col], lambda rows: rows.select(id_col, "sig"))
 
 
 def signature_view(spark, history_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Merged signature history: per-commit dedup (exactly-once under
-    replay) → the (id, sig) frame ``incremental_neardup`` consumes."""
-    return _signature_view_of(_read_log(spark, history_path), id_col)
-
-
-def _signature_view_of(log: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", id_col])
-        .select(id_col, "sig")
-    )
+    """Merged signature history → the (id, sig) frame
+    ``incremental_neardup`` consumes."""
+    return _signatures(id_col).view(spark, history_path)
 
 
 def neardup_stream_check(
@@ -1159,10 +860,7 @@ def neardup_stream_check(
 
 
 def compact_signatures(spark, history_path: str, quiesced: bool = True) -> None:
-    """Fold the signature log to one row per document; same
-    quiesced/online contract as the other compactors (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, history_path, _signature_view_of, quiesced)
+    _signatures("doc_id").compact(spark, history_path, quiesced)
 
 
 # ------------------- incremental substring-dedup (window-hash history)
@@ -1185,91 +883,59 @@ def make_substring_clean_sink(
     Replay safety: the clean step excludes hashes the SAME batch id
     committed (a replayed batch must not see its own first attempt as
     'history'), so re-running a batch reproduces byte-identical
-    cleaned rows and per-commit dedup in the views drops them.  Same
-    log contract as the other incremental sinks: atomic appends,
-    per-commit replay dedup, online-compaction watermark honored."""
+    cleaned rows and per-commit dedup in the views drops them."""
     from ..cache import unpersist_tracked
     from ..operators.dedup import (
         _window_occurrences,
         incremental_substring_clean,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        try:
-            log = _read_log(spark, history_path)
-            hist = _window_hash_view_of(
-                log.filter(F.col("__commit") != batch_id)
-            )
-        except FileNotFoundError:
-            hist = spark.createDataFrame([], "h bigint")
-        cleaned = incremental_substring_clean(
-            batch_df, hist, k, text_col, id_col
+    history, clean = CommitLog(history_path), CommitLog(clean_path)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        hist = _WINDOW_HASHES.view(
+            batch_df.sparkSession, history_path, exclude=batch_id, missing="h bigint"
         )
-        AtomicParquetTable(clean_path).append(
-            cleaned.withColumn("__commit", F.lit(batch_id))
+        clean.append(
+            incremental_substring_clean(batch_df, hist, k, text_col, id_col), batch_id
         )
         hashes = (
             _window_occurrences(batch_df, k, text_col, id_col)
             .select("h")
             .distinct()
         )
-        AtomicParquetTable(history_path).append(
-            hashes.withColumn("__commit", F.lit(batch_id))
-        )
+        history.append(hashes, batch_id)
         unpersist_tracked()
 
-    return sink
+    return CommitLog.batch_sink(body)
+
+
+_WINDOW_HASHES = _Fold(None, lambda rows: rows.select("h").distinct())
 
 
 def window_hash_view(spark, history_path: str) -> DataFrame:
     """Merged distinct window-hash history — the frame
     ``incremental_substring_clean`` consumes."""
-    return _window_hash_view_of(_read_log(spark, history_path))
-
-
-def _window_hash_view_of(log: DataFrame) -> DataFrame:
-    return _drop_replays_behind_watermark(log).select("h").distinct()
+    return _WINDOW_HASHES.view(spark, history_path)
 
 
 def substring_clean_view(
     spark, clean_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Merged cleaned corpus: per-commit dedup (exactly-once under
-    replay) over the streamed x194 output rows."""
-    return _substring_clean_view_of(_read_log(spark, clean_path), id_col)
-
-
-def _substring_clean_view_of(
-    log: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", id_col])
-        .drop("__commit")
-    )
+    """Merged cleaned corpus over the streamed x194 output rows."""
+    return _Fold([id_col]).view(spark, clean_path)
 
 
 def compact_window_hashes(
     spark, history_path: str, quiesced: bool = True
 ) -> None:
-    """Fold the hash log to one row per distinct hash; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, history_path, _window_hash_view_of, quiesced)
+    _WINDOW_HASHES.compact(spark, history_path, quiesced)
 
 
 def compact_substring_clean(
     spark, clean_path: str, id_col: str = "doc_id", quiesced: bool = True
 ) -> None:
-    """Fold the cleaned-corpus log to one row per document."""
-    _compact(
-        spark,
-        clean_path,
-        lambda log: _substring_clean_view_of(log, id_col),
-        quiesced,
-    )
+    _Fold([id_col]).compact(spark, clean_path, quiesced)
 
 
 # ------------------------------------------- incremental bloom filter
@@ -1281,42 +947,25 @@ def make_bloom_sink(sketch_path: str, value_col: str):
     batch size, word-wise OR-mergeable, so the merged filter equals
     the batch-built filter over all data.  The streamed form of the
     decontamination / blocklist screen: keep the filter current as
-    eval sets or blocklists arrive.  Same log contract as the other
-    sketch sinks: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    eval sets or blocklists arrive."""
     from ..operators.sketches import bloom_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = bloom_build(batch_df, value_col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
+    return CommitLog(sketch_path).sink(lambda batch_df: bloom_build(batch_df, value_col))
 
-    return sink
+
+_BLOOM = _Fold(
+    ["word"], lambda rows: rows.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+)
 
 
 def bloom_stream_view(spark, sketch_path: str) -> DataFrame:
-    """Merged filter: word-wise bit_or of the partial filters after
-    per-commit dedup — feed through operators.sketches.bloom_pack to
-    probe."""
-    return _bloom_view_of(_read_log(spark, sketch_path))
-
-
-def _bloom_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "word"])
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+    """Merged filter: word-wise bit_or of the partial filters — feed
+    through operators.sketches.bloom_pack to probe."""
+    return _BLOOM.view(spark, sketch_path)
 
 
 def compact_bloom(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-filter log to one (word, bits) set; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, _bloom_view_of, quiesced)
+    _BLOOM.compact(spark, sketch_path, quiesced)
 
 
 # ---------------------------------------------- streaming quality gate
@@ -1341,36 +990,30 @@ def make_quality_gate_sink(
     NULL text normalizes to empty, and docs with no scorable bigram
     (empty / single-token) are rejected as ``unscoreable`` rather
     than silently bypassing the threshold.  Accepted fingerprints
-    append to the history commit-stamped so the NEXT batch sees them
-    — the complete incremental curation loop.
+    append to the history so the NEXT batch sees them — the complete
+    incremental curation loop.
 
-    Replay contract: the history read excludes rows carrying THIS
-    batch's own commit id, so a batch replayed after a crash joins
-    the identical pre-batch history and re-derives byte-identical
-    decisions.  Restarting the stream on a FRESH checkpoint resets
-    batch ids; run ``compact_gate_history`` first (it folds history
-    to the reserved commit -1, which no live batch ever excludes) —
-    the same quiesced-restart contract the other incremental sinks
-    document.  The per-batch decision frame is persisted so the
-    accept/reject/history appends run the scoring and dedup joins
-    once, not three times."""
+    Replay contract: the history read excludes THIS batch's own
+    commit, so a batch replayed after a crash joins the identical
+    pre-batch history and re-derives byte-identical decisions.
+    Restarting the stream on a FRESH checkpoint resets batch ids; run
+    ``compact_gate_history`` first.  The per-batch decision frame is
+    persisted so the accept/reject/history appends run the scoring and
+    dedup joins once, not three times."""
     from ..operators.curation import score_with_bigram_lm
     from ..operators.dedup import incremental_dedup
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    accept, reject = CommitLog(accept_path), CommitLog(reject_path)
+    history = CommitLog(fingerprint_history_path)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
         scored = score_with_bigram_lm(batch, lm_path, id_col, text_col)
-        history = AtomicParquetTable(fingerprint_history_path).read(spark)
-        if history is None:
-            history = spark.createDataFrame([], "fingerprint string, __commit long")
+        seen = history.rows(
+            batch_df.sparkSession, exclude=batch_id, missing="fingerprint string"
+        )
         deduped = incremental_dedup(
-            batch,
-            history.filter(F.col("__commit") != batch_id).select("fingerprint"),
-            text_col=text_col,
-            id_col=id_col,
+            batch, seen.select("fingerprint"), text_col=text_col, id_col=id_col
         )
         decided = (
             batch.select(id_col, text_col)
@@ -1385,7 +1028,6 @@ def make_quality_gate_sink(
                     F.lit("high_perplexity"),
                 ),
             )
-            .withColumn("__commit", F.lit(batch_id))
             .persist()
         )
         try:
@@ -1393,42 +1035,30 @@ def make_quality_gate_sink(
             rejected = decided.filter(F.col("reject_reason").isNotNull()).drop(
                 "keep", "fingerprint"
             )
-            AtomicParquetTable(accept_path).append(
-                accepted.drop("keep", "fingerprint", "reject_reason")
-            )
-            AtomicParquetTable(reject_path).append(rejected)
-            AtomicParquetTable(fingerprint_history_path).append(
-                accepted.select("fingerprint")
-                .distinct()
-                .withColumn("__commit", F.lit(batch_id))
-            )
+            accept.append(accepted.drop("keep", "fingerprint", "reject_reason"), batch_id)
+            reject.append(rejected, batch_id)
+            history.append(accepted.select("fingerprint").distinct(), batch_id)
         finally:
             decided.unpersist()
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
 def compact_gate_history(spark, fingerprint_history_path: str) -> None:
-    """Fold the gate's fingerprint history to one distinct-fingerprint
-    table stamped with the reserved commit -1 (never a live batch id,
+    """Fold the gate's fingerprint history to its distinct
+    fingerprints, stamped as quiesced history (never a live batch id,
     so no batch's own-commit exclusion can hide it).  Run against a
     quiesced stream before restarting on a fresh checkpoint — with
     batch ids reset, un-compacted history rows whose commit collides
-    with a new batch id would be invisible to exactly that batch.
-    Goes through the shared ``_compact`` driver: pinned-snapshot CAS
-    (a fingerprint batch appended mid-fold surfaces as
-    ConcurrentWriteError instead of vanishing) + vacuum."""
-    _compact(
-        spark,
-        fingerprint_history_path,
-        lambda log: log.select("fingerprint").distinct(),
-        quiesced=True,
+    with a new batch id would be invisible to exactly that batch."""
+    CommitLog(fingerprint_history_path).compact(
+        spark, lambda rows: rows.select("fingerprint").distinct()
     )
 
 
 def gate_view(spark, path: str, id_col: str = "doc_id") -> DataFrame:
     """Replay-deduplicated view of an accept/reject log."""
-    return _read_log(spark, path).dropDuplicates(["__commit", id_col])
+    return CommitLog(path).rows(spark, dedup_on=[id_col])
 
 
 # ------------------------------------------------- streaming curation
@@ -1463,22 +1093,27 @@ def make_curation_sink(
                        eval set outgrows a broadcast)
 
     State under ``path``: fingerprint + signature histories (appended
-    with ACCEPTED docs only, commit-stamped), accept/reject logs with
-    per-doc stage attribution, and a per-batch per-stage yield log
-    (sum-mergeable counters — ``curation_yield_view`` folds it to the
-    cumulative funnel).  Replay contract: both history reads exclude
-    THIS batch's own commit id and every log dedups per commit, so a
-    replayed batch re-derives byte-identical decisions (test-pinned)."""
+    with ACCEPTED docs only), accept/reject logs with per-doc stage
+    attribution, and a per-batch per-stage yield log (sum-mergeable
+    counters — ``curation_yield_view`` folds it to the cumulative
+    funnel).  Replay contract: both history reads exclude THIS batch's
+    own commit and every log dedups per commit, so a replayed batch
+    re-derives byte-identical decisions (test-pinned)."""
     from ..operators.curation import (
         decontaminate,
         gopher_quality_rules,
     )
-    from ..operators.dedup import incremental_dedup, minhash_signatures
+    from ..operators.dedup import (
+        incremental_dedup,
+        incremental_neardup,
+        minhash_signatures,
+    )
     from ..operators.text import fingerprint
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    acc, rej, yld = (CommitLog(f"{path}/{name}") for name in ("acc", "rej", "yield"))
+    fp, sig = CommitLog(f"{path}/fp"), CommitLog(f"{path}/sig")
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col)
         n_in = batch.count()
@@ -1491,14 +1126,10 @@ def make_curation_sink(
             n_q = quality_pass.count()
 
             # tier 2: exact, vs history (excluding own commit) + in-batch
-            fp_log = AtomicParquetTable(f"{path}/fp").read(spark)
-            if fp_log is None:
-                fp_log = spark.createDataFrame(
-                    [], "fingerprint string, __commit long"
-                )
+            seen = fp.rows(spark, exclude=batch_id, missing="fingerprint string")
             ex = incremental_dedup(
                 quality_pass,
-                fp_log.filter(F.col("__commit") != batch_id).select("fingerprint"),
+                seen.select("fingerprint"),
                 text_col=text_col,
                 id_col=id_col,
             )
@@ -1511,15 +1142,11 @@ def make_curation_sink(
 
             # tier 3: near-dup, vs signature history (excluding own
             # commit) + in-batch pairs
-            sig_log = AtomicParquetTable(f"{path}/sig").read(spark)
-            if sig_log is None:
-                sig_log = spark.createDataFrame(
-                    [], f"{id_col} long, sig array<bigint>, __commit long"
-                )
-            from ..operators.dedup import incremental_neardup
-
-            hist_sigs = _signature_view_of(
-                sig_log.filter(F.col("__commit") != batch_id), id_col
+            hist_sigs = _signatures(id_col).view(
+                spark,
+                f"{path}/sig",
+                exclude=batch_id,
+                missing=f"{id_col} long, sig array<bigint>",
             )
             pairs = incremental_neardup(
                 exact_pass, hist_sigs, min_est_jaccard=min_est_jaccard
@@ -1547,8 +1174,7 @@ def make_curation_sink(
             n_d = accepted.count()
 
             # route + advance state (accepted docs only)
-            stamp = F.lit(batch_id).alias("__commit")
-            AtomicParquetTable(f"{path}/acc").append(accepted.select("*", stamp))
+            acc.append(accepted, batch_id)
             rejected = (
                 staged.filter(~F.col("keep"))
                 .select(id_col, F.lit("1_quality").alias("stage"))
@@ -1568,15 +1194,12 @@ def make_curation_sink(
                     )
                 )
             )
-            AtomicParquetTable(f"{path}/rej").append(rejected.select("*", stamp))
-            AtomicParquetTable(f"{path}/fp").append(
-                accepted.select(
-                    fingerprint(F.col(text_col)).alias("fingerprint"), stamp
-                )
+            rej.append(rejected, batch_id)
+            fp.append(
+                accepted.select(fingerprint(F.col(text_col)).alias("fingerprint")),
+                batch_id,
             )
-            AtomicParquetTable(f"{path}/sig").append(
-                minhash_signatures(accepted, text_col, id_col).select("*", stamp)
-            )
+            sig.append(minhash_signatures(accepted, text_col, id_col), batch_id)
             yields = spark.createDataFrame(
                 [
                     ("1_quality", n_in, n_in - n_q, n_q),
@@ -1586,29 +1209,21 @@ def make_curation_sink(
                 ],
                 "stage string, docs_in long, docs_removed long, docs_out long",
             )
-            AtomicParquetTable(f"{path}/yield").append(yields.select("*", stamp))
+            yld.append(yields, batch_id)
             for frame in (exact_pass, nd_pass, accepted):
                 frame.unpersist()
         finally:
             staged.unpersist()
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
 def curation_yield_view(spark, path: str) -> DataFrame:
-    """Cumulative per-stage funnel from the yield log: per-commit dedup
-    then sum — the continuously-maintained counterpart of x94's
-    one-shot funnel rows."""
-    log = _read_log(spark, f"{path}/yield")
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "stage"])
-        .groupBy("stage")
-        .agg(
-            F.sum("docs_in").cast("long").alias("docs_in"),
-            F.sum("docs_removed").cast("long").alias("docs_removed"),
-            F.sum("docs_out").cast("long").alias("docs_out"),
-        )
+    """Cumulative per-stage funnel from the yield log — the
+    continuously-maintained counterpart of x94's one-shot funnel
+    rows."""
+    return _sums(["stage"], "docs_in", "docs_removed", "docs_out").view(
+        spark, f"{path}/yield"
     )
 
 
@@ -1628,7 +1243,7 @@ def datasheet_drift_view(
     drop."""
     from ..operators import text as tx
 
-    sums = _datasheet_sums_of(_read_log(spark, f"{path}/sums"))
+    sums = _DATASHEET_SUMS.view(spark, f"{path}/sums")
     t = F.col(text_col)
     new_sums = (
         new_docs.select(
@@ -1690,39 +1305,29 @@ def make_manifest_sink(path: str, n_shards: int = 16):
     commutative-mergeable (xor of xors, sum of modular sums), so the
     merged view equals the batch manifest over all data ever ingested
     EXACTLY, not approximately.  The log grows by n_shards rows per
-    batch regardless of batch size; replay dedup and compaction follow
-    the shared contract.  (checksum_sum headroom: per-doc terms are
-    < 1e9+7 and BIGINT holds ~9.2e18, so a shard absorbs ~9e9 docs
-    between compactions; production n_shards scales with the corpus,
-    keeping per-shard counts far below that.)"""
+    batch regardless of batch size.  (checksum_sum headroom: per-doc
+    terms are < 1e9+7 and BIGINT holds ~9.2e18, so a shard absorbs
+    ~9e9 docs between compactions; production n_shards scales with
+    the corpus, keeping per-shard counts far below that.)"""
     from ..operators.curation import shard_manifest
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = shard_manifest(batch_df, n_shards=n_shards)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _manifest_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "shard_id"])
-        .groupBy("shard_id")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.min("min_doc_id").alias("min_doc_id"),
-            F.max("max_doc_id").alias("max_doc_id"),
-            F.expr("bit_xor(checksum_xor)").alias("checksum_xor"),
-            F.sum("checksum_sum").cast("long").alias("checksum_sum"),
-        )
+    return CommitLog(path).sink(
+        lambda batch_df: shard_manifest(batch_df, n_shards=n_shards)
     )
+
+
+_MANIFEST = _Fold(
+    ["shard_id"],
+    lambda rows: rows.groupBy("shard_id").agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
+        F.sum("n_chars").cast("long").alias("n_chars"),
+        F.min("min_doc_id").alias("min_doc_id"),
+        F.max("max_doc_id").alias("max_doc_id"),
+        F.expr("bit_xor(checksum_xor)").alias("checksum_xor"),
+        F.sum("checksum_sum").cast("long").alias("checksum_sum"),
+    ),
+)
 
 
 def manifest_stream_view(spark, path: str) -> DataFrame:
@@ -1730,14 +1335,11 @@ def manifest_stream_view(spark, path: str) -> DataFrame:
     batch-side over every document ever ingested.  Feed two views (or
     a view and a pinned batch manifest) to operators.curation.
     manifest_diff for incremental re-validation."""
-    return _manifest_view_of(_read_log(spark, path))
+    return _MANIFEST.view(spark, path)
 
 
 def compact_manifest(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the manifest log to its current n_shards merged rows; the
-    fold is itself a valid partial (same mergeable schema), so live
-    appends keep composing after compaction."""
-    _compact(spark, path, _manifest_view_of, quiesced)
+    _MANIFEST.compact(spark, path, quiesced)
 
 
 def make_priority_sample_sink(path: str, k: int = 100, **candidate_kwargs):
@@ -1752,25 +1354,20 @@ def make_priority_sample_sink(path: str, k: int = 100, **candidate_kwargs):
     re-ingestions append identical rows that the view dedups."""
     from ..operators.curation import priority_candidates
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cand = priority_candidates(batch_df, k, **candidate_kwargs)
-        AtomicParquetTable(path).append(
-            cand.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
+    return CommitLog(path).sink(
+        lambda batch_df: priority_candidates(batch_df, k, **candidate_kwargs)
+    )
 
 
-def _psample_candidates_of(log: DataFrame, k: int, id_col: str) -> DataFrame:
+def _priority_candidates(k: int, id_col: str) -> _Fold:
     # priorities are a pure function of doc id, so identical rows from
-    # replays OR genuine re-ingestions collapse under the id dedup
-    dedup = _drop_replays_behind_watermark(log).dropDuplicates([id_col])
-    return (
-        dedup.drop("__commit")
+    # replays OR genuine re-ingestions collapse under the id dedup; the
+    # global top-(k+1) is itself a valid candidate partial
+    return _Fold(
+        None,
+        lambda rows: rows.dropDuplicates([id_col])
         .orderBy(F.col("priority").desc(), F.col(id_col))
-        .limit(k + 1)
+        .limit(k + 1),
     )
 
 
@@ -1783,20 +1380,14 @@ def priority_sample_view(
     from ..operators.curation import sample_from_candidates
 
     return sample_from_candidates(
-        _psample_candidates_of(_read_log(spark, path), k, id_col), k, id_col
+        _priority_candidates(k, id_col).view(spark, path), k, id_col
     )
 
 
 def compact_priority_sample(
     spark, path: str, k: int = 100, id_col: str = "doc_id", quiesced: bool = True
 ) -> None:
-    """Fold the candidate log to the current global top-(k+1) rows;
-    the fold is itself a valid candidate partial (same schema, and
-    top-(k+1) of a union that includes the folded top-(k+1) is
-    unchanged), so live appends keep composing after compaction."""
-    _compact(
-        spark, path, lambda log: _psample_candidates_of(log, k, id_col), quiesced
-    )
+    _priority_candidates(k, id_col).compact(spark, path, quiesced)
 
 
 def make_bootstrap_ci_sink(path: str, value_q, n_boot: int = 32, **kw):
@@ -1811,32 +1402,18 @@ def make_bootstrap_ci_sink(path: str, value_q, n_boot: int = 32, **kw):
     BIGINT value (e.g. floor(quality_score * 1e6))."""
     from ..operators.profile import bootstrap_partials
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         rated = batch_df.select(
             kw.get("group_col", "source"),
             kw.get("id_col", "doc_id"),
             value_q.alias("value_q"),
         )
-        partial = bootstrap_partials(rated, n_boot=n_boot, **kw)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
+        return bootstrap_partials(rated, n_boot=n_boot, **kw)
 
-    return sink
+    return CommitLog(path).sink(partial)
 
 
-def _bootstrap_partials_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp", "b"])
-        .groupBy("grp", "b")
-        .agg(
-            F.sum("sum_m").cast("long").alias("sum_m"),
-            F.sum("sum_mv").cast("long").alias("sum_mv"),
-        )
-    )
+_BOOTSTRAP = _sums(["grp", "b"], "sum_m", "sum_mv")
 
 
 def bootstrap_ci_view(spark, path: str, group_col: str = "source") -> DataFrame:
@@ -1845,16 +1422,11 @@ def bootstrap_ci_view(spark, path: str, group_col: str = "source") -> DataFrame:
     ingested batches."""
     from ..operators.profile import ci_from_bootstrap_partials
 
-    return ci_from_bootstrap_partials(
-        _bootstrap_partials_of(_read_log(spark, path)), group_col
-    )
+    return ci_from_bootstrap_partials(_BOOTSTRAP.view(spark, path), group_col)
 
 
 def compact_bootstrap_ci(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the partial log to one merged row per (group, replicate);
-    the fold is itself a valid partial (sums of sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _bootstrap_partials_of, quiesced)
+    _BOOTSTRAP.compact(spark, path, quiesced)
 
 
 def make_gini_sink(path: str, weight, group_col: str = "source"):
@@ -1864,33 +1436,17 @@ def make_gini_sink(path: str, weight, group_col: str = "source"):
     gini_concentration over every document ever ingested.  State is
     bounded by the weight DOMAIN (distinct token counts), not the
     corpus.  ``weight`` is a Column producing the per-doc BIGINT
-    weight.  Append-exactly-once per doc contract, like the other
-    counting sinks."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = (
-            batch_df.select(
-                F.col(group_col).alias("grp"), weight.cast("long").alias("weight")
-            )
-            .groupBy("grp", "weight")
-            .agg(F.count("*").cast("long").alias("cnt"))
+    weight."""
+    return CommitLog(path).sink(
+        lambda batch_df: batch_df.select(
+            F.col(group_col).alias("grp"), weight.cast("long").alias("weight")
         )
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _gini_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp", "weight"])
         .groupBy("grp", "weight")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .agg(F.count("*").cast("long").alias("cnt"))
     )
+
+
+_GINI = _sums(["grp", "weight"], "cnt")
 
 
 def gini_view(spark, path: str, group_col: str = "source") -> DataFrame:
@@ -1899,39 +1455,13 @@ def gini_view(spark, path: str, group_col: str = "source") -> DataFrame:
     ingested batches."""
     from ..operators.profile import gini_from_hist
 
-    return gini_from_hist(
-        _gini_hist_of(_read_log(spark, path)), "weight", "grp"
-    ).withColumnRenamed("grp", group_col)
+    return gini_from_hist(_GINI.view(spark, path), "weight", "grp").withColumnRenamed(
+        "grp", group_col
+    )
 
 
 def compact_gini(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the histogram log to one row per (group, weight) cell; the
-    fold is itself a valid partial (cell-wise sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _gini_hist_of, quiesced)
-
-
-_DISPERSION_VIEW_FRAMES: list[DataFrame] = []
-
-
-def dispersion_view(spark, counts_path: str, threshold: float = 1.5) -> DataFrame:
-    """Fano-factor burstiness over the SAME hourly-count store the
-    seasonal sink maintains — the fourth detector on the one rollup
-    (seasonal deviations / CUSUM shifts / robust point outliers /
-    dispersion).  Identical code path as the batch operator
-    (``dispersion_scores_from_dense``), so merged-view == batch is a
-    structural guarantee; same per-commit replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, dispersion_scores_from_dense
-
-    cache.release(_DISPERSION_VIEW_FRAMES)
-    _DISPERSION_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = dispersion_scores_from_dense(densify_hourly(sparse), threshold)
-    _DISPERSION_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _GINI.compact(spark, path, quiesced)
 
 
 def make_term_histogram_sink(path: str, source_col: str = "source",
@@ -1939,32 +1469,19 @@ def make_term_histogram_sink(path: str, source_col: str = "source",
     """Continuously-maintained (source, term) token histogram — ONE
     shared lexical store serving every downstream term statistic
     (lexical diversity x129, Zipf fit x132, and any fightin'-words
-    comparison), the way the hourly-count store serves the four
+    comparison), the way the hourly-count store serves the
     time-series detectors.  Each batch appends its batch-local
     histogram; cells ADD, so merged views are BIT-EQUAL to the batch
     operators over every document ever ingested.  State is bounded by
-    the vocabulary, not the corpus.  Append-exactly-once per doc
-    contract, like the other counting sinks."""
+    the vocabulary, not the corpus."""
     from ..operators.curation import term_histogram
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = term_histogram(batch_df, source_col, text_col)
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _term_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src", "term"])
-        .groupBy("src", "term")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return CommitLog(path).sink(
+        lambda batch_df: term_histogram(batch_df, source_col, text_col)
     )
+
+
+_TERM_HIST = _sums(["src", "term"], "cnt")
 
 
 def lexical_view(spark, path: str) -> DataFrame:
@@ -1975,7 +1492,7 @@ def lexical_view(spark, path: str) -> DataFrame:
     per call — a monitoring loop must not accumulate cached frames."""
     from ..operators.curation import lexical_diversity_from_hist
 
-    return lexical_diversity_from_hist(_term_hist_of(_read_log(spark, path)))
+    return lexical_diversity_from_hist(_TERM_HIST.view(spark, path))
 
 
 def zipf_view(spark, path: str) -> DataFrame:
@@ -1984,68 +1501,29 @@ def zipf_view(spark, path: str) -> DataFrame:
     batches."""
     from ..operators.curation import zipf_fit_from_hist
 
-    return zipf_fit_from_hist(_term_hist_of(_read_log(spark, path)))
+    return zipf_fit_from_hist(_TERM_HIST.view(spark, path))
 
 
 def compact_term_histogram(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the histogram log to one row per (src, term) cell; the
-    fold is itself a valid partial (cell-wise sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _term_hist_of, quiesced)
-
-
-_TREND_VIEW_FRAMES: list[DataFrame] = []
-
-
-def trend_view(spark, counts_path: str, z_crit: float = 1.96) -> DataFrame:
-    """Mann-Kendall trend + Sen's slope over the SAME hourly-count
-    store the seasonal sink maintains — the FIFTH detector on the one
-    rollup (seasonal deviations / CUSUM shifts / robust point
-    outliers / dispersion / monotonic trend).  Identical code path as
-    the batch operator (``mann_kendall_from_dense``), so merged-view
-    == batch is a structural guarantee; same per-commit replay dedup
-    and scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, mann_kendall_from_dense
-
-    cache.release(_TREND_VIEW_FRAMES)
-    _TREND_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = mann_kendall_from_dense(densify_hourly(sparse), z_crit)
-    _TREND_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _TERM_HIST.compact(spark, path, quiesced)
 
 
 def make_length_histogram_sink(path: str, source_col: str = "source",
                                text_col: str = "text"):
     """Continuously-maintained (source, doc-length) histogram — the
-    mergeable state behind the streaming KS drift monitor: each batch
-    appends its batch-local length histogram; cells ADD, so the
-    merged KS report is BIT-EQUAL to the batch operator over every
+    mergeable state behind the streaming KS and PSI drift monitors:
+    each batch appends its batch-local length histogram; cells ADD, so
+    the merged reports are BIT-EQUAL to the batch operators over every
     document ever ingested.  State is bounded by the number of
-    distinct lengths per source, never the corpus.  Same
-    append-exactly-once contract as the other counting sinks."""
+    distinct lengths per source, never the corpus."""
     from ..operators.curation import length_histogram
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = length_histogram(batch_df, source_col, text_col)
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _length_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src", "len"])
-        .groupBy("src", "len")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return CommitLog(path).sink(
+        lambda batch_df: length_histogram(batch_df, source_col, text_col)
     )
+
+
+_LENGTH_HIST = _sums(["src", "len"], "cnt")
 
 
 def ks_view(spark, path: str) -> DataFrame:
@@ -2055,56 +1533,11 @@ def ks_view(spark, path: str) -> DataFrame:
     profile drifted?' monitor."""
     from ..operators.curation import ks_from_hist
 
-    return ks_from_hist(_length_hist_of(_read_log(spark, path)))
+    return ks_from_hist(_LENGTH_HIST.view(spark, path))
 
 
 def compact_length_histogram(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the length-histogram log to one row per (src, len) cell;
-    the fold is a valid partial (cell-wise sums), so live appends keep
-    composing after compaction."""
-    _compact(spark, path, _length_hist_of, quiesced)
-
-
-_ACF_VIEW_FRAMES: list[DataFrame] = []
-
-
-def acf_view(spark, counts_path: str, max_lag_hours: int = 24) -> DataFrame:
-    """Autocorrelation over the SAME hourly-count store — the SIXTH
-    consumer of the one rollup (four anomaly detectors + trend +
-    periodicity).  Identical code path as the batch operator
-    (``acf_from_dense``); same replay dedup and scope-release cache
-    bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import acf_from_dense, densify_hourly
-
-    cache.release(_ACF_VIEW_FRAMES)
-    _ACF_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = acf_from_dense(densify_hourly(sparse), max_lag_hours)
-    _ACF_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
-
-
-_HW_VIEW_FRAMES: list[DataFrame] = []
-
-
-def forecast_view(spark, counts_path: str, **hw_kwargs) -> DataFrame:
-    """Holt-Winters forecast over the SAME hourly-count store — the
-    SEVENTH consumer of the one rollup (detectors + trend +
-    periodicity + forecast).  Identical code path as the batch
-    operator (``holt_winters_from_dense``); same replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, holt_winters_from_dense
-
-    cache.release(_HW_VIEW_FRAMES)
-    _HW_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = holt_winters_from_dense(densify_hourly(sparse), **hw_kwargs)
-    _HW_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _LENGTH_HIST.compact(spark, path, quiesced)
 
 
 def psi_view(spark, path: str, smooth: float = 0.5, crit: float = 0.2) -> DataFrame:
@@ -2114,7 +1547,7 @@ def psi_view(spark, path: str, smooth: float = 0.5, crit: float = 0.2) -> DataFr
     operators.curation.length_psi over all ingested docs."""
     from ..operators.curation import psi_from_hist
 
-    return psi_from_hist(_length_hist_of(_read_log(spark, path)), smooth, crit)
+    return psi_from_hist(_LENGTH_HIST.view(spark, path), smooth, crit)
 
 
 # ----------------------------------------- incremental privacy audit
@@ -2130,31 +1563,16 @@ def make_privacy_sink(path: str, quasi_cols: list[str], sensitive_col: str):
     under ingest only per class (new rows can only grow a class), but
     new rows create NEW small classes, which is exactly why the audit
     must re-run as the corpus grows; this sink makes that re-run
-    log-sized.  Shares the replay/compaction contract of the other
-    sinks."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = batch_df.groupBy(*quasi_cols, sensitive_col).agg(
+    log-sized."""
+    return CommitLog(path).sink(
+        lambda batch_df: batch_df.groupBy(*quasi_cols, sensitive_col).agg(
             F.count("*").cast("long").alias("n")
         )
-        AtomicParquetTable(path).append(
-            counts.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _privacy_counts_of(
-    log: DataFrame, quasi_cols: list[str], sensitive_col: str
-) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *quasi_cols, sensitive_col])
-        .groupBy(*quasi_cols, sensitive_col)
-        .agg(F.sum("n").cast("long").alias("n"))
     )
+
+
+def _privacy(quasi_cols: list[str], sensitive_col: str) -> _Fold:
+    return _sums([*quasi_cols, sensitive_col], "n")
 
 
 def privacy_view(
@@ -2172,9 +1590,7 @@ def privacy_view(
     the class-count log, never raw documents."""
     from ..operators.profile import k_anonymity_from_classes
 
-    counts = _privacy_counts_of(
-        _read_log(spark, path), quasi_cols, sensitive_col
-    )
+    counts = _privacy(quasi_cols, sensitive_col).view(spark, path)
     classes = counts.groupBy(*quasi_cols).agg(
         F.sum("n").cast("long").alias("cls_n"),
         # counts is already unique per (quasi, sensitive): row count IS
@@ -2191,14 +1607,7 @@ def compact_privacy(
     sensitive_col: str,
     quiesced: bool = True,
 ) -> None:
-    """Fold the privacy count log; same CAS contract as the other
-    sinks."""
-    _compact(
-        spark,
-        path,
-        lambda log: _privacy_counts_of(log, quasi_cols, sensitive_col),
-        quiesced,
-    )
+    _privacy(quasi_cols, sensitive_col).compact(spark, path, quiesced)
 
 
 # ------------------------------------ incremental classifier training
@@ -2211,46 +1620,28 @@ def make_classifier_sink(path: str, label_col: str = "lang", text_col: str = "te
     counts — both sum-mergeable, bounded per batch by batch vocabulary
     x labels, never by history — so the model retrains from log-sized
     state as labeled data streams in, instead of rescanning the whole
-    labeled corpus per refresh.  Shares the replay/compaction contract
-    of the other sinks."""
+    labeled corpus per refresh."""
     from ..operators.text import tokens
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    toks, docs = CommitLog(f"{path}/toks"), CommitLog(f"{path}/docs")
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         lbl = F.col(label_col).alias("label")
         counts = (
             batch_df.select(lbl, F.explode(tokens(F.col(text_col))).alias("tok"))
             .groupBy("label", "tok")
             .agg(F.count("*").cast("long").alias("c"))
         )
-        AtomicParquetTable(f"{path}/toks").append(
-            counts.withColumn("__commit", F.lit(batch_id))
-        )
-        docn = batch_df.groupBy(lbl).agg(F.count("*").cast("long").alias("n"))
-        AtomicParquetTable(f"{path}/docs").append(
-            docn.withColumn("__commit", F.lit(batch_id))
+        toks.append(counts, batch_id)
+        docs.append(
+            batch_df.groupBy(lbl).agg(F.count("*").cast("long").alias("n")), batch_id
         )
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
-def _classifier_toks_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "label", "tok"])
-        .groupBy("label", "tok")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def _classifier_docs_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "label"])
-        .groupBy("label")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+_CLASSIFIER_TOKS = _sums(["label", "tok"], "c")
+_CLASSIFIER_DOCS = _sums(["label"], "n")
 
 
 def classifier_model_view(spark, path: str, alpha: float = 0.5) -> DataFrame:
@@ -2261,16 +1652,15 @@ def classifier_model_view(spark, path: str, alpha: float = 0.5) -> DataFrame:
     plugs straight into ``nb_score`` / the size-gated model join."""
     from ..operators.classify import nb_model_from_counts
 
-    counts = _classifier_toks_of(_read_log(spark, f"{path}/toks"))
-    docn = _classifier_docs_of(_read_log(spark, f"{path}/docs"))
+    counts = _CLASSIFIER_TOKS.view(spark, f"{path}/toks")
+    docn = _CLASSIFIER_DOCS.view(spark, f"{path}/docs")
     return nb_model_from_counts(counts, docn, alpha=alpha)
 
 
 def compact_classifier(spark, path: str, quiesced: bool = True) -> None:
-    """Fold both classifier count logs; same CAS contract as the
-    other sinks."""
-    _compact(spark, f"{path}/toks", _classifier_toks_of, quiesced)
-    _compact(spark, f"{path}/docs", _classifier_docs_of, quiesced)
+    """Fold both classifier count logs."""
+    _CLASSIFIER_TOKS.compact(spark, f"{path}/toks", quiesced)
+    _CLASSIFIER_DOCS.compact(spark, f"{path}/docs", quiesced)
 
 
 def release_audit_view(
@@ -2334,14 +1724,12 @@ def make_fertility_sink(path: str, group_col: str = "lang", text_col: str = "tex
     whitespace words, BPE-ish sub-word tokens, bytes and chars — all
     sum-mergeable, |groups| rows per batch — so fertility and
     bytes-per-token stay answerable as the corpus grows without
-    re-tokenizing history.  Shares the replay/compaction contract."""
+    re-tokenizing history."""
     from ..operators.text import bpe_regex_token_count, token_count
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         t = F.col(text_col)
-        sums = (
+        return (
             batch_df.select(
                 F.col(group_col).alias("grp"),
                 token_count(t).alias("ws"),
@@ -2358,33 +1746,18 @@ def make_fertility_sink(path: str, group_col: str = "lang", text_col: str = "tex
                 F.sum("chars").cast("long").alias("n_chars"),
             )
         )
-        AtomicParquetTable(path).append(
-            sums.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return CommitLog(path).sink(partial)
 
 
-def _fertility_sums_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp"])
-        .groupBy("grp")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_bytes").cast("long").alias("n_bytes"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-        )
-    )
+_FERTILITY = _sums(["grp"], "n_docs", "n_words", "n_tokens", "n_bytes", "n_chars")
 
 
 def fertility_view(spark, path: str, group_col: str = "lang") -> DataFrame:
     """Current tokenizer-budget report over everything ingested —
     bit-equal to the batch x168 operator over the union of batches
     (corpus-level ratios of exact folded sums)."""
-    sums = _fertility_sums_of(_read_log(spark, path))
+    sums = _FERTILITY.view(spark, path)
 
     def ratio(num, den):
         return (
@@ -2409,9 +1782,7 @@ def fertility_view(spark, path: str, group_col: str = "lang") -> DataFrame:
 
 
 def compact_fertility(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the fertility sum log; same CAS contract as the other
-    sinks."""
-    _compact(spark, path, _fertility_sums_of, quiesced)
+    _FERTILITY.compact(spark, path, quiesced)
 
 
 def make_pii_sink(path: str, source_col: str = "source", text_col: str = "text"):
@@ -2419,15 +1790,12 @@ def make_pii_sink(path: str, source_col: str = "source", text_col: str = "text")
     of x164's pii family): per batch, per-source counts of documents
     and of documents with ANY PII regex hit — sum-mergeable, |sources|
     rows per batch — so the zero-residue release invariant is
-    checkable at any moment without rescanning text.  Shares the
-    replay/compaction contract."""
+    checkable at any moment without rescanning text."""
     from ..operators.text import pii_counts
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         pii = pii_counts(F.col(text_col))
-        sums = (
+        return (
             batch_df.select(
                 F.col(source_col).alias("src"),
                 ((pii["EMAIL"] + pii["IPV4"] + pii["PHONE"]) > 0)
@@ -2440,29 +1808,17 @@ def make_pii_sink(path: str, source_col: str = "source", text_col: str = "text")
                 F.sum("has_pii").cast("long").alias("n_pii_docs"),
             )
         )
-        AtomicParquetTable(path).append(
-            sums.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return CommitLog(path).sink(partial)
 
 
-def _pii_sums_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src"])
-        .groupBy("src")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_pii_docs").cast("long").alias("n_pii_docs"),
-        )
-    )
+_PII = _sums(["src"], "n_docs", "n_pii_docs")
 
 
 def pii_view(spark, path: str) -> DataFrame:
     """Current per-source PII residue over everything ingested:
     (source, n_docs, n_pii_docs, pii_doc_rate, ok = zero residue)."""
-    sums = _pii_sums_of(_read_log(spark, path))
+    sums = _PII.view(spark, path)
     return sums.select(
         F.col("src").alias("source"),
         "n_docs",
@@ -2481,8 +1837,7 @@ def pii_view(spark, path: str) -> DataFrame:
 
 
 def compact_pii(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the PII count log; same CAS contract as the other sinks."""
-    _compact(spark, path, _pii_sums_of, quiesced)
+    _PII.compact(spark, path, quiesced)
 
 
 # --------------------------------------- incremental embedding health
@@ -2495,12 +1850,9 @@ def make_embedding_health_sink(path: str, vec_col: str = "embedding",
     moment partials (n, sum, sum-of-squares, near-zero count) — all
     sum-mergeable, |dims| rows per batch — so dead-dimension and
     anisotropy screens stay answerable as vectors stream in, without
-    re-reading the embedding store.  Shares the replay/compaction
-    contract."""
+    re-reading the embedding store."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         q = F.lit(1e8)
         rows = batch_df.select(
             F.posexplode(F.col(vec_col).cast("array<double>"))
@@ -2510,31 +1862,17 @@ def make_embedding_health_sink(path: str, vec_col: str = "embedding",
             (F.col("col") * F.col("col") * q).cast("long").alias("qvv"),
             (F.abs(F.col("col")) < F.lit(near_zero)).cast("long").alias("nz"),
         )
-        per = rows.groupBy("dim").agg(
+        return rows.groupBy("dim").agg(
             F.count("*").cast("long").alias("n"),
             F.sum("qv").cast("long").alias("sv"),
             F.sum("qvv").cast("long").alias("svv"),
             F.sum("nz").cast("long").alias("n_near_zero"),
         )
-        AtomicParquetTable(path).append(
-            per.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return CommitLog(path).sink(partial)
 
 
-def _embedding_moments_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "dim"])
-        .groupBy("dim")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sv").cast("long").alias("sv"),
-            F.sum("svv").cast("long").alias("svv"),
-            F.sum("n_near_zero").cast("long").alias("n_near_zero"),
-        )
-    )
+_EMBEDDING_MOMENTS = _sums(["dim"], "n", "sv", "svv", "n_near_zero")
 
 
 def embedding_health_view(spark, path: str) -> DataFrame:
@@ -2543,14 +1881,11 @@ def embedding_health_view(spark, path: str) -> DataFrame:
     (the SAME report derivation runs on the folded moments)."""
     from ..operators.embed import embedding_health_from_moments
 
-    return embedding_health_from_moments(
-        _embedding_moments_of(_read_log(spark, path))
-    )
+    return embedding_health_from_moments(_EMBEDDING_MOMENTS.view(spark, path))
 
 
 def compact_embedding_health(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the moment log; same CAS contract as the other sinks."""
-    _compact(spark, path, _embedding_moments_of, quiesced)
+    _EMBEDDING_MOMENTS.compact(spark, path, quiesced)
 
 
 # ------------------------------------- incremental conformal calibration
@@ -2564,35 +1899,20 @@ def make_conformal_sink(path: str, id_col: str = "doc_id", text_col: str = "text
     shared verbatim with the batch query — and cells ADD, so the
     merged thresholds are BIT-EQUAL to conformal_thresholds over every
     document ever ingested.  State is bounded by score quantization
-    (distinct q values), never the corpus.  Same append-exactly-once
-    contract as the other counting sinks."""
+    (distinct q values), never the corpus."""
     from ..operators.curation import lexdiv_qscore
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cells = (
-            batch_df.select(
-                (F.col(id_col) % 2 == 0).alias("is_cal"),
-                lexdiv_qscore(F.col(text_col)).alias("q"),
-            )
-            .groupBy("is_cal", "q")
-            .agg(F.count("*").cast("long").alias("nk"))
+    return CommitLog(path).sink(
+        lambda batch_df: batch_df.select(
+            (F.col(id_col) % 2 == 0).alias("is_cal"),
+            lexdiv_qscore(F.col(text_col)).alias("q"),
         )
-        AtomicParquetTable(path).append(
-            cells.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _conformal_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "is_cal", "q"])
         .groupBy("is_cal", "q")
-        .agg(F.sum("nk").cast("long").alias("nk"))
+        .agg(F.count("*").cast("long").alias("nk"))
     )
+
+
+_CONFORMAL = _sums(["is_cal", "q"], "nk")
 
 
 def conformal_view(
@@ -2606,7 +1926,7 @@ def conformal_view(
     input histogram."""
     from ..operators.curation import conformal_from_hist
 
-    hist = _conformal_hist_of(_read_log(spark, path))
+    hist = _CONFORMAL.view(spark, path)
     return conformal_from_hist(
         hist.filter(F.col("is_cal")).select("q", "nk"),
         hist.filter(~F.col("is_cal")).select("q", "nk"),
@@ -2615,10 +1935,7 @@ def conformal_view(
 
 
 def compact_conformal(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the conformal score-histogram log to one row per
-    (is_cal, q) cell; cell-wise sums are a valid partial, so live
-    appends keep composing after compaction."""
-    _compact(spark, path, _conformal_hist_of, quiesced)
+    _CONFORMAL.compact(spark, path, quiesced)
 
 
 # --------------------------------------- incremental retrieval evaluation
@@ -2637,27 +1954,19 @@ def make_retrieval_eval_sink(
     search index deliberately drops.  Rows are PER-DOCUMENT facts, so
     per-batch partials union to exactly the batch frame (each document
     arrives in one batch — the same append-only-corpus assumption as
-    make_index_sink); a replayed batch recomputes identical rows and
-    deduplicates at read time."""
+    make_index_sink)."""
     from ..operators.retrieval import eval_tf_frame
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = eval_tf_frame(batch_df, id_col, text_col, rel_col)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _retrieval_tf_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "d", "term"])
-        .select("d", "rel", "dl", "term", "tf")
+    return CommitLog(path).sink(
+        lambda batch_df: eval_tf_frame(batch_df, id_col, text_col, rel_col)
     )
+
+
+# rows are per-document facts (no cross-batch merging): the fold is
+# pure replay-dedup
+_RETRIEVAL_TF = _Fold(
+    ["d", "term"], lambda rows: rows.select("d", "rel", "dl", "term", "tf")
+)
 
 
 def retrieval_eval_view(spark, path: str, **eval_kwargs) -> DataFrame:
@@ -2669,16 +1978,11 @@ def retrieval_eval_view(spark, path: str, **eval_kwargs) -> DataFrame:
     merged store is exactly its input frame."""
     from ..operators.retrieval import retrieval_eval_from_tf
 
-    return retrieval_eval_from_tf(
-        _retrieval_tf_of(_read_log(spark, path)), **eval_kwargs
-    )
+    return retrieval_eval_from_tf(_RETRIEVAL_TF.view(spark, path), **eval_kwargs)
 
 
 def compact_retrieval_eval(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the postings log to one row per (d, term); rows are
-    per-document facts (no cross-batch merging), so the fold is pure
-    replay-dedup and live appends keep composing after compaction."""
-    _compact(spark, path, _retrieval_tf_of, quiesced)
+    _RETRIEVAL_TF.compact(spark, path, quiesced)
 
 
 # -------------------------------------- incremental tokenizer retraining
@@ -2690,38 +1994,25 @@ def make_wordfreq_sink(path: str, text_col: str = "text", max_word_len: int = 12
     batch appends its (w, freq) count partials; counts ADD, so the
     model retrained from the merged store is BIT-EQUAL to batch
     training over every document ever ingested.  State is bounded by
-    the vocabulary (distinct truncated words), never the corpus.  Same
-    append-exactly-once contract as the other counting sinks.
+    the vocabulary (distinct truncated words), never the corpus.
 
     ``max_word_len`` must match the training parameter (words are
     truncated BEFORE counting, exactly as _word_freqs does)."""
     from ..operators.text import _word_freqs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = _word_freqs(batch_df, text_col, max_word_len)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _wordfreq_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "w"])
-        .groupBy("w")
-        .agg(F.sum("freq").cast("long").alias("freq"))
+    return CommitLog(path).sink(
+        lambda batch_df: _word_freqs(batch_df, text_col, max_word_len)
     )
+
+
+_WORDFREQ = _sums(["w"], "freq")
 
 
 def wordfreq_view(spark, path: str) -> DataFrame:
     """Current merged (w, freq) word-frequency table over all ingested
     batches — the tokenizer trainer's input state, also useful on its
     own (Zipf checks, vocabulary growth)."""
-    return _wordfreq_of(_read_log(spark, path))
+    return _WORDFREQ.view(spark, path)
 
 
 def unigram_model_view(spark, path: str, **train_kwargs) -> DataFrame:
@@ -2737,16 +2028,11 @@ def unigram_model_view(spark, path: str, **train_kwargs) -> DataFrame:
     retraining cadence, not per batch."""
     from ..operators.text import unigram_lm_train_from_words
 
-    return unigram_lm_train_from_words(
-        _wordfreq_of(_read_log(spark, path)), **train_kwargs
-    )
+    return unigram_lm_train_from_words(wordfreq_view(spark, path), **train_kwargs)
 
 
 def compact_wordfreq(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the word-frequency log to one row per word; word counts are
-    a valid partial (sums), so live appends keep composing after
-    compaction."""
-    _compact(spark, path, _wordfreq_of, quiesced)
+    _WORDFREQ.compact(spark, path, quiesced)
 
 
 # --------------------------------- incremental semantic decontamination
@@ -2774,25 +2060,19 @@ def make_semantic_decontam_sink(
     for the view to be bit-equal."""
     from ..operators.similarity import semantic_decontaminate
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        verdicts = semantic_decontaminate(
+    return CommitLog(path).sink(
+        lambda batch_df: semantic_decontaminate(
             batch_df, eval_emb, planes, threshold, id_col, vec_col
         )
-        AtomicParquetTable(path).append(
-            verdicts.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _semantic_decontam_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "vec_id"])
-        .select("vec_id", "max_eval_cosine", "matched_eval_id", "is_contaminated")
     )
+
+
+_SEMANTIC_DECONTAM = _Fold(
+    ["vec_id"],
+    lambda rows: rows.select(
+        "vec_id", "max_eval_cosine", "matched_eval_id", "is_contaminated"
+    ),
+)
 
 
 def semantic_decontam_view(spark, path: str) -> DataFrame:
@@ -2800,13 +2080,11 @@ def semantic_decontam_view(spark, path: str) -> DataFrame:
     ingested embedding batches — bit-equal to batch x178 on the union
     corpus (verdicts are per-document facts against the fixed eval
     suite)."""
-    return _semantic_decontam_of(_read_log(spark, path))
+    return _SEMANTIC_DECONTAM.view(spark, path)
 
 
 def compact_semantic_decontam(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the verdict log to one row per vector; pure replay-dedup
-    (no cross-batch merging), live appends keep composing."""
-    _compact(spark, path, _semantic_decontam_of, quiesced)
+    _SEMANTIC_DECONTAM.compact(spark, path, quiesced)
 
 
 def t_closeness_view(
@@ -2824,10 +2102,10 @@ def t_closeness_view(
     class-count log, never raw documents."""
     from ..operators.profile import t_closeness_from_cells
 
-    cells = _privacy_counts_of(
-        _read_log(spark, path), quasi_cols, sensitive_col
-    ).withColumnRenamed("n", "cv")
-    return t_closeness_from_cells(cells, quasi_cols, sensitive_col, t_ppm)
+    cells = _privacy(quasi_cols, sensitive_col).view(spark, path)
+    return t_closeness_from_cells(
+        cells.withColumnRenamed("n", "cv"), quasi_cols, sensitive_col, t_ppm
+    )
 
 
 # ------------------------------------- leakage-safe split stability
@@ -2881,9 +2159,9 @@ def make_split_anchor_sink(
     from ..operators.curation import split_of_id
     from ..operators.dedup import connected_components, incremental_neardup
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    log = CommitLog(assign_path)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         hist = signature_view(spark, history_path, id_col)
         pairs = (
@@ -2900,17 +2178,12 @@ def make_split_anchor_sink(
             .select("new_id", "matched_id")
             .distinct()
         )
-        try:
-            assigned = _split_assign_view_of(
-                _read_log(spark, assign_path), id_col
-            ).select(
-                F.col(id_col).alias("matched_id"),
-                F.col("anchor_id").alias("cur_anchor"),
-            )
-        except FileNotFoundError:
-            assigned = spark.createDataFrame(
-                [], f"matched_id long, cur_anchor long"
-            )
+        assigned = _split_assignments(
+            log, spark, id_col, missing=f"{id_col} long, anchor_id long"
+        ).select(
+            F.col(id_col).alias("matched_id"),
+            F.col("anchor_id").alias("cur_anchor"),
+        )
         edges = pairs.join(assigned, "matched_id", "left").select(
             F.col("new_id").alias("doc_a"),
             F.coalesce(F.col("cur_anchor"), F.col("matched_id")).alias("doc_b"),
@@ -2958,29 +2231,22 @@ def make_split_anchor_sink(
                 F.lit(True).alias("anchor_changed"),
             )
         )
-        AtomicParquetTable(assign_path).append(
-            batch_rows.unionByName(updates).withColumn("__commit", F.lit(batch_id))
-        )
+        log.append(batch_rows.unionByName(updates), batch_id)
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
-def _split_assign_view_of(log: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Latest assignment per doc.  Within one commit a doc appears at
-    most once (batch rows and update rows are disjoint by the
-    left_anti in the sink); across commits the LOWEST anchor is the
-    newest (anchors only decrease), so ordering by anchor ascending
-    inside the __commit tiebreak makes replayed-then-compacted logs
-    resolve identically to live ones."""
-    w = W.partitionBy(id_col).orderBy(
-        F.col("__commit").desc(), F.col("anchor_id").asc()
-    )
-    return (
-        _drop_replays_behind_watermark(log)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__commit")
-    )
+# Latest assignment per doc.  Within one commit a doc appears at most
+# once (batch rows and update rows are disjoint by the left_anti in the
+# sink); across commits the LOWEST anchor is the newest (anchors only
+# decrease), so ordering by anchor ascending after the commit makes
+# replayed-then-compacted logs resolve identically to live ones.
+def _anchor_order() -> list:
+    return [F.asc("anchor_id")]
+
+
+def _split_assignments(log: CommitLog, spark, id_col: str, **read) -> DataFrame:
+    return log.rows(spark, latest_on=[id_col], order=_anchor_order(), **read)
 
 
 def split_stability_view(spark, assign_path: str, id_col: str = "doc_id") -> DataFrame:
@@ -2989,15 +2255,15 @@ def split_stability_view(spark, assign_path: str, id_col: str = "doc_id") -> Dat
     one-shot batch x179 assignment over everything ingested (pinned by
     test), with ``anchor_changed`` marking docs whose cluster was
     merged into a smaller anchor after first assignment."""
-    return _split_assign_view_of(_read_log(spark, assign_path), id_col)
+    return _split_assignments(CommitLog(assign_path), spark, id_col)
 
 
 def compact_split_assignments(
     spark, assign_path: str, quiesced: bool = True
 ) -> None:
-    """Fold the assignment log to one row per document; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, assign_path, _split_assign_view_of, quiesced)
+    CommitLog(assign_path).compact(
+        spark, latest_on=["doc_id"], order=_anchor_order(), quiesced=quiesced
+    )
 
 
 # --------------------------------------------- incremental bitext mining
@@ -3029,18 +2295,15 @@ def make_bitext_candidate_sink(
     Per batch: O(batch x matched buckets) join work + one read of the
     merged embedding log (the prep side is the persisted artifact,
     ~(dim+3) values per vector — the corpus itself is never re-read;
-    same cost class as the other incremental views).  Both logs get
-    the house contract: per-commit replay dedup, atomic appends,
-    online compaction."""
+    same cost class as the other incremental views)."""
     from ..operators.similarity import (
         bitext_candidates_between,
         bitext_prep_frame,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    cands, embs = CommitLog(cand_path), CommitLog(emb_path)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         prep = bitext_prep_frame(
             batch_df.filter(F.col(lang_col).isin(src_lang, tgt_lang)),
             tables,
@@ -3048,14 +2311,11 @@ def make_bitext_candidate_sink(
             vec_col,
             lang_col,
         ).localCheckpoint(eager=False)
-        try:
-            old = _bitext_emb_view_of(_read_log(spark, emb_path))
-        except FileNotFoundError:
-            old = spark.createDataFrame(
-                [],
-                "id long, l string, v array<double>, n double, "
-                "buckets array<long>",
-            )
+        old = _BITEXT_EMB.view(
+            batch_df.sparkSession,
+            emb_path,
+            missing="id long, l string, v array<double>, n double, buckets array<long>",
+        )
         new_s = prep.filter(F.col("l") == src_lang)
         new_t = prep.filter(F.col("l") == tgt_lang)
         old_s = old.filter(F.col("l") == src_lang)
@@ -3063,32 +2323,20 @@ def make_bitext_candidate_sink(
         cand = bitext_candidates_between(new_s, all_t).unionByName(
             bitext_candidates_between(old_s, new_t)
         )
-        AtomicParquetTable(cand_path).append(
-            cand.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(emb_path).append(
-            prep.withColumn("__commit", F.lit(batch_id))
-        )
+        cands.append(cand, batch_id)
+        embs.append(prep, batch_id)
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
-def _bitext_emb_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "id"])
-        .select("id", "l", "v", "n", "buckets")
-        .dropDuplicates(["id"])
-    )
-
-
-def _bitext_cand_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "sid", "tid"])
-        .select("sid", "tid", "cos", "cq")
-        .dropDuplicates(["sid", "tid"])
-    )
+_BITEXT_EMB = _Fold(
+    ["id"],
+    lambda rows: rows.select("id", "l", "v", "n", "buckets").dropDuplicates(["id"]),
+)
+_BITEXT_CAND = _Fold(
+    ["sid", "tid"],
+    lambda rows: rows.select("sid", "tid", "cos", "cq").dropDuplicates(["sid", "tid"]),
+)
 
 
 def bitext_stream_view(
@@ -3105,7 +2353,7 @@ def bitext_stream_view(
     from ..operators.similarity import bitext_margin_from_candidates
 
     return bitext_margin_from_candidates(
-        _bitext_cand_view_of(_read_log(spark, cand_path)),
+        _BITEXT_CAND.view(spark, cand_path),
         knn_k=knn_k,
         margin_threshold=margin_threshold,
         mutual_best=mutual_best,
@@ -3113,13 +2361,11 @@ def bitext_stream_view(
 
 
 def compact_bitext_candidates(spark, cand_path: str, quiesced: bool = True) -> None:
-    """Fold the candidate log to one row per pair; house contract."""
-    _compact(spark, cand_path, _bitext_cand_view_of, quiesced)
+    _BITEXT_CAND.compact(spark, cand_path, quiesced)
 
 
 def compact_bitext_embeddings(spark, emb_path: str, quiesced: bool = True) -> None:
-    """Fold the embedding prep log to one row per vector."""
-    _compact(spark, emb_path, _bitext_emb_view_of, quiesced)
+    _BITEXT_EMB.compact(spark, emb_path, quiesced)
 
 
 # --------------------------------------- continuous trigram-LM counts
@@ -3133,63 +2379,41 @@ def make_trigram_counts_sink(path: str, text_col: str = "text", id_col: str = "d
     every document ever ingested (the ctx12/ctx2/scalar tables are
     deterministic functions of the folded tiers, exactly as in
     _trigram_model_tables).  State is bounded by the distinct-n-gram
-    vocabulary, never the corpus.  House append-exactly-once
-    contract on all three sub-logs."""
+    vocabulary, never the corpus."""
     from ..operators.curation import _trigram_model_tables
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    tiers = [CommitLog(f"{path}/{tier}") for tier in ("tgc", "bgc", "unic")]
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         narrow, tgc, _, bgc, _, unic, _ = _trigram_model_tables(
             batch_df, id_col, text_col
         )
-        AtomicParquetTable(f"{path}/tgc").append(
-            tgc.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(f"{path}/bgc").append(
-            bgc.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(f"{path}/unic").append(
-            unic.withColumn("__commit", F.lit(batch_id))
-        )
+        for log, partial in zip(tiers, (tgc, bgc, unic)):
+            log.append(partial, batch_id)
         narrow.unpersist()
 
-    return sink
+    return CommitLog.batch_sink(body)
 
 
-def _trigram_tgc_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "tg_h"])
-        .groupBy("tg_h")
-        .agg(
+_TRIGRAM_TIERS = {
+    "tgc": _Fold(
+        ["tg_h"],
+        lambda rows: rows.groupBy("tg_h").agg(
             F.sum("c3").cast("long").alias("c3"),
             F.min("c12_h").alias("c12_h"),
             F.min("b23_h").alias("b23_h"),
             F.min("w3_h").alias("w3_h"),
-        )
-    )
-
-
-def _trigram_bgc_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "b23_h"])
-        .groupBy("b23_h")
-        .agg(
+        ),
+    ),
+    "bgc": _Fold(
+        ["b23_h"],
+        lambda rows: rows.groupBy("b23_h").agg(
             F.sum("c2b").cast("long").alias("c2b"),
             F.min("w2_h").alias("w2_h"),
-        )
-    )
-
-
-def _trigram_unic_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "w3_h"])
-        .groupBy("w3_h")
-        .agg(F.sum("c1w").cast("long").alias("c1w"))
-    )
+        ),
+    ),
+    "unic": _sums(["w3_h"], "c1w"),
+}
 
 
 def trigram_stream_score(
@@ -3208,9 +2432,9 @@ def trigram_stream_score(
     docs here is bit-equal to x184 over that union (pinned by test)."""
     from ..operators.curation import score_with_trigram_tables
 
-    tgc = _trigram_tgc_of(_read_log(spark, f"{path}/tgc"))
-    bgc = _trigram_bgc_of(_read_log(spark, f"{path}/bgc"))
-    unic = _trigram_unic_of(_read_log(spark, f"{path}/unic"))
+    tgc, bgc, unic = (
+        fold.view(spark, f"{path}/{tier}") for tier, fold in _TRIGRAM_TIERS.items()
+    )
     ctx12 = tgc.groupBy("c12_h").agg(F.sum("c3").alias("c12"))
     ctx2 = bgc.groupBy("w2_h").agg(F.sum("c2b").alias("c2"))
     scalars = (
@@ -3225,8 +2449,6 @@ def trigram_stream_score(
 
 
 def compact_trigram_counts(spark, path: str, quiesced: bool = True) -> None:
-    """Fold all three tier logs; counts are valid partials (sums), so
-    live appends keep composing after compaction."""
-    _compact(spark, f"{path}/tgc", _trigram_tgc_of, quiesced)
-    _compact(spark, f"{path}/bgc", _trigram_bgc_of, quiesced)
-    _compact(spark, f"{path}/unic", _trigram_unic_of, quiesced)
+    """Fold all three tier logs."""
+    for tier, fold in _TRIGRAM_TIERS.items():
+        fold.compact(spark, f"{path}/{tier}", quiesced)

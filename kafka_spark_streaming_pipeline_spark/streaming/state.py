@@ -21,7 +21,6 @@ under distributed execution.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -166,118 +165,6 @@ def dvr_manifests(chunks: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def _noop(*_: Any) -> None:  # pragma: no cover
-    return None
-
-
-# ----------------------------------------- transformWithState (Spark 4.x)
-
-try:  # Spark 4.x stateful processor API
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class GapTrackingProcessor(StatefulProcessor):
-        """ST5 on the transformWithStateInPandas API: same fold as
-        _track_gaps_fn but with typed ValueState and RocksDB-backed
-        storage — the engine's forward path (applyInPandasWithState
-        remains for HDFS-backed state stores).  Requires
-        spark.sql.streaming.stateStore.providerClass =
-        RocksDBStateStoreProvider."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("gap_state", GAP_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            (stream_id,) = key
-            existing = self._state.get() if self._state.exists() else None
-            last_seq, gap_events, missing_total = existing if existing else (-1, 0, 0)
-            # Global sort across Arrow chunks — see _track_gaps_fn.
-            seqs = sorted(s for pdf in rows for s in pdf["sequence_number"].tolist())
-            n_chunks = len(seqs)
-            for seq in seqs:
-                if last_seq >= 0 and seq > last_seq + 1:
-                    gap_events += 1
-                    missing_total += seq - last_seq - 1
-                if seq > last_seq:
-                    last_seq = seq
-            self._state.update((last_seq, gap_events, missing_total))
-            yield pd.DataFrame(
-                {
-                    "stream_id": [stream_id],
-                    "last_seq": [last_seq],
-                    "n_chunks": [n_chunks],
-                    "gap_events": [gap_events],
-                    "missing_total": [missing_total],
-                }
-            )
-
-        def close(self) -> None:
-            return None
-
-    def track_gaps_tws(chunks: DataFrame) -> DataFrame:
-        """track_gaps on the Spark 4.x transformWithStateInPandas API."""
-        return chunks.groupBy("stream_id").transformWithStateInPandas(
-            GapTrackingProcessor(),
-            outputStructType=GAP_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - pre-4.x PySpark
-    GapTrackingProcessor = None  # type: ignore[assignment]
-    track_gaps_tws = None  # type: ignore[assignment]
-
-
-def tws_runtime_available() -> bool:
-    """True when the transformWithStateInPandas path can actually run
-    on this build: the Spark 4.x stateful-processor API imports AND
-    the TWS Python runner's protobuf dependency is present (its state
-    server speaks protobuf to the JVM; ``applyInPandasWithState`` has
-    no such dependency).  The RocksDB state-store provider itself
-    ships inside Spark, so it is never the gating factor — it is
-    selected per query via
-    ``spark.sql.streaming.stateStore.providerClass``."""
-    if track_gaps_tws is None:
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-#: Selected ONCE at import (VERDICT r5 #5): on Spark >= 4.0 with
-#: protobuf installed the engine's default ST5 operator is the typed
-#: transformWithStateInPandas processor; otherwise the sanctioned
-#: applyInPandasWithState fold.  Both implement identical gap
-#: semantics over the same output schema, so callers are agnostic.
-TWS_DEFAULT = tws_runtime_available()
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def track_gaps_auto(chunks: DataFrame) -> DataFrame:
-    """ST5 with the state backend chosen at import time.  On a TWS-
-    capable runtime this routes through ``track_gaps_tws`` (ensuring
-    the RocksDB provider TWS requires, unless the session already
-    pinned one); elsewhere it is exactly ``track_gaps``."""
-    if TWS_DEFAULT:
-        spark = chunks.sparkSession
-        key = "spark.sql.streaming.stateStore.providerClass"
-        try:
-            current = spark.conf.get(key)
-        except Exception:
-            current = None
-        if not current:
-            spark.conf.set(key, _ROCKSDB_PROVIDER)
-        return track_gaps_tws(chunks)
-    return track_gaps(chunks)
 
 
 # ------------------------------------------------------- EWMA anomalies

@@ -21,7 +21,6 @@ from kafka_spark_streaming_pipeline_spark.streaming.pipeline import (
     start_foreach_batch,
     with_watermarked_windows,
 )
-from kafka_spark_streaming_pipeline_spark.streaming.sinks import make_live_sink, upsert_partitioned
 from kafka_spark_streaming_pipeline_spark.streaming.state import dvr_manifests, track_gaps
 
 
@@ -157,43 +156,6 @@ def test_gap_detection_across_batches(spark, tmp_path):
     assert final["s1"].missing_total == 2  # counts MISSING chunks (ref :382)
     assert final["s1"].last_seq == 11
     assert final["s2"].gap_events == 0
-
-
-def test_gap_backend_selected_at_import(spark, tmp_path):
-    """VERDICT r5 #5: ONE ST5 code path is chosen at import time —
-    transformWithStateInPandas where the runtime can execute it
-    (Spark 4.x API + protobuf), else applyInPandasWithState.  The
-    selection must match the capability probe, and the selected path
-    must produce the canonical cross-batch gap fold."""
-    from kafka_spark_streaming_pipeline_spark.streaming.state import (
-        TWS_DEFAULT,
-        track_gaps_auto,
-        tws_runtime_available,
-    )
-
-    assert TWS_DEFAULT == tws_runtime_available()
-    batches = [
-        [_event("s1", i, seq=i) for i in range(3)],
-        [_event("s1", i, seq=i) for i in (5, 6)],  # gap: 3,4 missing
-    ]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA)
-    cols = stream.select("stream_id", "sequence_number")
-    out = track_gaps_auto(cols if TWS_DEFAULT else stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("auto_gaps")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_auto"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    results = spark.sql("SELECT * FROM auto_gaps").collect()
-    final = max((r for r in results if r.stream_id == "s1"), key=lambda r: r.last_seq)
-    assert final.last_seq == 6
-    assert final.gap_events == 1
-    assert final.missing_total == 2
 
 
 def test_gap_fold_is_chunk_order_independent():
@@ -421,48 +383,32 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
 
 def test_upsert_sink_idempotent_under_replay(spark, tmp_path):
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        latest_view,
+    )
+
     table = str(tmp_path / "meta")
+    keys = ["stream_id", "chunk_index"]
     df = spark.createDataFrame([_event("s1", i) for i in range(4)], LIVE_CHUNK_SCHEMA)
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"], order_col="sequence_number")
+    append_log_upsert(df, table, batch_id=0)
     # replay the same batch (checkpoint recovery scenario, ST3)
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    out = spark.read.parquet(table)
+    append_log_upsert(df, table, batch_id=0)
+    out = latest_view(spark, table, keys, "sequence_number")
     assert out.count() == 4
     # update wins: new status for chunk 0 replaces the old row
     upd = _event("s1", 0)
     upd["status"] = "live"
-    upsert_partitioned(
-        spark.createDataFrame([upd], LIVE_CHUNK_SCHEMA),
-        table,
-        keys=["stream_id", "chunk_index"],
-        order_col="sequence_number",
-    )
-    out = spark.read.parquet(table)
+    append_log_upsert(spark.createDataFrame([upd], LIVE_CHUNK_SCHEMA), table, batch_id=1)
+    out = latest_view(spark, table, keys, "sequence_number")
     assert out.count() == 4
     assert out.filter(F.col("chunk_index") == 0).collect()[0].status == "live"
 
 
-def test_upsert_only_touched_partitions(spark, tmp_path):
-    table = str(tmp_path / "meta")
-    df = spark.createDataFrame(
-        [_event("s1", 0), _event("s2", 0)], LIVE_CHUNK_SCHEMA
-    )
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"])
-    s2_files_before = set(os.listdir(os.path.join(table, "stream_id=s2")))
-    upsert_partitioned(
-        spark.createDataFrame([_event("s1", 1)], LIVE_CHUNK_SCHEMA),
-        table,
-        keys=["stream_id", "chunk_index"],
-    )
-    s2_files_after = set(os.listdir(os.path.join(table, "stream_id=s2")))
-    assert s2_files_before == s2_files_after  # untouched partition not rewritten
-    assert spark.read.parquet(table).count() == 3
-
-
 def test_end_to_end_live_query(spark, tmp_path):
-    """Full topology on the DEFAULT (merge-on-read, crash-atomic) live
-    sink: file-source micro-batches -> transform -> foreachBatch dual
-    sink (metadata log upsert + chunk objects)."""
+    """Full topology on the merge-on-read, crash-atomic live sink:
+    file-source micro-batches -> transform -> foreachBatch dual sink
+    (metadata log upsert + chunk objects)."""
     from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
         latest_view,
         make_live_log_sink,
@@ -488,24 +434,6 @@ def test_end_to_end_live_query(spark, tmp_path):
     assert out.count() == 5  # chunk 2 upserted once
     assert set(r.chunk_index for r in out.collect()) == set(range(5))
     assert spark.read.parquet(chunks).count() >= 5
-
-
-def test_cow_live_sink_still_works(spark, tmp_path):
-    """The copy-on-write alternative sink keeps its semantics."""
-    batches = [[_event("s1", i) for i in range(3)]]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA, max_files_per_trigger=1)
-    meta = str(tmp_path / "meta")
-    chunks = str(tmp_path / "chunks")
-    q = start_foreach_batch(
-        live_transform(stream),
-        make_live_sink(meta, chunks),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        query_name="live_cow",
-        available_now=False,
-    )
-    _drain(q)
-    assert spark.read.parquet(meta).count() == 3
 
 
 # --------------------------------------------------------------- metrics
@@ -552,46 +480,6 @@ def test_observed_metrics_listener(spark, tmp_path):
     assert listener.gauges["approx_streams"] >= 1
     assert "max_latency_ms" in listener.gauges
     assert listener.batches >= 1
-
-
-def test_gap_detection_transform_with_state(spark, tmp_path):
-    """ST5 via the Spark 4.x transformWithStateInPandas API: same
-    cross-batch fold as track_gaps, RocksDB-backed typed state."""
-    from kafka_spark_streaming_pipeline_spark.streaming.state import track_gaps_tws
-
-    if track_gaps_tws is None:
-        pytest.skip("transformWithState requires Spark 4.x")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState's Python runner needs google.protobuf")
-    batches = [
-        [_event("s1", i, seq=i) for i in (0, 1, 2)],
-        [_event("s1", i, seq=i) for i in (5, 6)],  # gap of 2 (3,4 missing)
-    ]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA)
-        out = track_gaps_tws(stream.select("stream_id", "sequence_number"))
-        results = []
-        q = start_foreach_batch(
-            out,
-            lambda df, _id: results.extend(df.collect()),
-            checkpoint_dir=str(tmp_path / "ckpt_tws"),
-            available_now=True,
-            query_name="tws_test",
-        )
-        _drain(q)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    final = {r.stream_id: r for r in results}["s1"]
-    assert final.last_seq == 6
-    assert final.gap_events == 1
-    assert final.missing_total == 2
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -717,6 +605,19 @@ def test_log_sink_latest_view_and_compaction(spark, tmp_path):
         for r in latest_view(spark, path, keys, "sequence_number").collect()
     }
     assert after == got
+
+    # a later batch wins on its key even with an equal order_col value,
+    # and merges with the compacted history
+    rows3 = spark.createDataFrame(
+        [("s1", 1, 1, "v3")],
+        "stream_id string, chunk_index long, sequence_number long, payload string",
+    )
+    append_log_upsert(rows3, path, batch_id=3)
+    final = {
+        (r.stream_id, r.chunk_index): r.payload
+        for r in latest_view(spark, path, keys, "sequence_number").collect()
+    }
+    assert final == {("s1", 0): "v2", ("s1", 1): "v3"}
 
 
 def test_ewma_anomaly_stream_flags_spike_across_batches(spark, tmp_path):

@@ -39,26 +39,32 @@ def _fail_publish(monkeypatch):
 
 
 def test_crash_before_commit_preserves_upsert_table(spark, tmp_path, monkeypatch):
-    table = AtomicParquetTable(str(tmp_path / "t"), partition_col="stream_id")
-    table.upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]),
-                 keys=["stream_id", "chunk_index"], order_col="sequence_number")
+    """The merge-on-read upsert table: a log append that dies before its
+    manifest rename is invisible, and the retried batch wins its key."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        latest_view,
+    )
+
+    path = str(tmp_path / "t")
+    table = AtomicParquetTable(path)
+    keys = ["stream_id", "chunk_index"]
+    append_log_upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]), path, batch_id=0)
     before = _snapshot(spark, table)
     v_before = table.version(spark)
 
     _fail_publish(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated"):
-        table.upsert(_df(spark, [("s1", 0, 2, "TORN")]),
-                     keys=["stream_id", "chunk_index"], order_col="sequence_number")
+        append_log_upsert(_df(spark, [("s1", 0, 2, "TORN")]), path, batch_id=1)
     # the half-written commit is invisible: same version, same rows
     assert table.version(spark) == v_before
     assert _snapshot(spark, table) == before
 
     monkeypatch.undo()
     # retry after "restart" lands normally
-    table.upsert(_df(spark, [("s1", 0, 2, "v2")]),
-                 keys=["stream_id", "chunk_index"], order_col="sequence_number")
+    append_log_upsert(_df(spark, [("s1", 0, 2, "v2")]), path, batch_id=1)
     rows = {(r.stream_id, r.chunk_index): r.payload
-            for r in table.read(spark).collect()}
+            for r in latest_view(spark, path, keys, "sequence_number").collect()}
     assert rows == {("s1", 0): "v2", ("s2", 0): "v1"}
 
 
@@ -130,29 +136,6 @@ def test_concurrent_commit_one_winner(spark, tmp_path):
         txn._publish(fs, root, v, {"version": v, "partition_col": None, "entries": []})
 
 
-def test_upsert_repoints_only_touched_partitions(spark, tmp_path):
-    """Partition-granular COW: a batch touching s1 only must not
-    rewrite s2's files — s2's manifest entry keeps pointing at the
-    original commit dir."""
-    root = str(tmp_path / "t")
-    table = AtomicParquetTable(root, partition_col="stream_id")
-    table.upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]),
-                 keys=["stream_id", "chunk_index"])
-    fs = txn._FS(spark, root)
-    _, m1 = table._resolve(fs)
-    [e1] = m1["entries"]
-    assert sorted(e1["partitions"]) == ["s1", "s2"]
-
-    table.upsert(_df(spark, [("s1", 1, 1, "v1")]), keys=["stream_id", "chunk_index"])
-    _, m2 = table._resolve(fs)
-    by_parts = {tuple(e["partitions"]): e["dir"] for e in m2["entries"]}
-    assert by_parts[("s2",)] == e1["dir"]  # untouched partition re-pointed, not rewritten
-    assert by_parts[("s1",)] != e1["dir"]
-    assert table.read(spark).count() == 3
-    # manifest-level pruning reads only the asked partition
-    assert table.read(spark, partition_values=["s2"]).count() == 1
-
-
 def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     root = str(tmp_path / "t")
     table = AtomicParquetTable(root)
@@ -166,18 +149,48 @@ def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     assert fs_exists(spark, root)
 
 
-def test_upsert_fails_loudly_over_partition_cap(spark, tmp_path):
-    table = AtomicParquetTable(
-        str(tmp_path / "capped"), partition_col="part", max_touched_partitions=5
+def test_vacuum_spares_appends_in_flight_after_compaction(spark, tmp_path, monkeypatch):
+    """An append that resolved the version a compaction just published
+    has written its data dir (and then its temporary manifest) but not
+    yet renamed the manifest when a vacuum runs.  Both are staged for a
+    version after the latest commit, so vacuum must keep them and the
+    append must commit a readable version."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        compact_log,
+        latest_view,
     )
-    wide = spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").cast("string").alias("part"),
-        F.lit("v").alias("val"),
-    )
-    with pytest.raises(ValueError, match="> 5 distinct"):
-        table.upsert(wide, keys=["k"])
-    narrow = wide.filter(F.col("k") < 5)
-    assert table.upsert(narrow, keys=["k"]) == 1  # under the cap: commits
+
+    path = str(tmp_path / "log")
+    keys = ["stream_id", "chunk_index"]
+    append_log_upsert(_df(spark, [("s1", 0, 1, "a")]), path, batch_id=0)
+    compact_log(spark, path, keys, "sequence_number", quiesced=False)
+
+    # vacuum between the data write and the manifest write
+    publish = txn._publish
+
+    def vacuum_then_publish(fs, root, version, manifest):
+        AtomicParquetTable(root).vacuum(spark)
+        publish(fs, root, version, manifest)
+
+    monkeypatch.setattr(txn, "_publish", vacuum_then_publish)
+    append_log_upsert(_df(spark, [("s1", 1, 1, "b")]), path, batch_id=1)
+    monkeypatch.undo()
+
+    # vacuum between the temporary manifest write and its rename
+    rename = txn._FS.rename
+
+    def vacuum_then_rename(fs, src, dst):
+        AtomicParquetTable(path).vacuum(spark)
+        return rename(fs, src, dst)
+
+    monkeypatch.setattr(txn._FS, "rename", vacuum_then_rename)
+    append_log_upsert(_df(spark, [("s1", 2, 1, "c")]), path, batch_id=2)
+    monkeypatch.undo()
+
+    got = {(r.stream_id, r.chunk_index): r.payload
+           for r in latest_view(spark, path, keys, "sequence_number").collect()}
+    assert got == {("s1", 0): "a", ("s1", 1): "b", ("s1", 2): "c"}
 
 
 def test_time_travel_reads_and_vacuum_expires(spark, tmp_path):
@@ -188,7 +201,7 @@ def test_time_travel_reads_and_vacuum_expires(spark, tmp_path):
     v2 = table.append(df2)
     v3 = table.overwrite(spark.range(100, 101).withColumn("tag", F.lit("c")))
     assert (v1, v2, v3) == (1, 2, 3)
-    # commit files are immutable, data dirs copy-on-write: every
+    # commit files are immutable, data dirs never rewritten: every
     # un-vacuumed version reads exactly as published
     assert table.read(spark, version=1).count() == 3
     assert table.read(spark, version=2).count() == 5

@@ -3,7 +3,7 @@
 
 Pushes N synthetic live-chunk events (default 200k) through the full
 topology — decode-equivalent transform (defaults, checksum, latency,
-paths), keyed cross-batch gap state, idempotent upsert sink — using
+paths), keyed cross-batch gap state, merge-on-read log sink — using
 availableNow micro-batches, and prints ONE JSON line with events/s.
 
 The reference's measured live throughput is 1.32 events/s end-to-end

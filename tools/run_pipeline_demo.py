@@ -9,7 +9,7 @@ as parquet micro-batches, then runs the full topology:
   file stream -> defaults/validate/derive (JVM columns)
               -> observe() metrics
               -> keyed gap state + DVR manifest state
-              -> idempotent keyed upsert sink + chunk object sink
+              -> merge-on-read metadata log sink + chunk object sink
 
 and prints the resulting health rows, a rendered HLS manifest, the
 metrics the listener scraped, and the sink table row counts.
